@@ -1,10 +1,14 @@
 package graft.algos
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.Ckpt
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
+import graft.core.{CsrGraph, VertexLayout, VertexLoop}
 
-final case class CCResult(components: DataFrame, iterations: Int)
+/** `converged` is false when the loop stopped at `maxIter` with a round
+  * that still changed the grandparents. */
+final case class CCResult(components: DataFrame, iterations: Int, converged: Boolean)
 
 /** Connected components via FastSV (Zhang, Azad, Buluç; SIAM PP20), with the
   * exact semantics of the reference notebook
@@ -18,77 +22,78 @@ final case class CCResult(components: DataFrame, iterations: Int)
   *         f = min(f, mngp) ; f = min(f, gp)   — hook + shortcut
   *         gp = f[f] ; stop when gp unchanged
   *
-  * Edge input must be symmetric (both directions present). All vectors are
-  * dense (id, v) DataFrames co-keyed on id; every step is an equi-join +
-  * hash aggregation. Iteration state (f, gp) is re-materialized per round
-  * via Ckpt (flat plans — O(1) planning cost per round) and previous-round
-  * blocks are released one round later. Converges in O(log n) rounds.
+  * Edge input must be symmetric (both directions present). The loop runs on
+  * the block-cyclic vertex kernel (`graft.core.VertexLoop`): f and gp are
+  * two long arrays per partition, and the edges are CSR blocks keyed by
+  * `dst`, so along each edge (i, j) the vertex j pushes gp(j) to i. A round
+  * is one job over four vertex-keyed shuffles, all (Long, Long): the pushes
+  * min-combined to their targets (mngp), the hooks min-combined to f(i),
+  * and the request and answer of the pointer jump gp = f[f]. The change
+  * count rides the job that materializes the new (f, gp). Converges in
+  * O(log n) rounds.
   */
 object ConnectedComponents {
+
+  private type State = RDD[((Array[Long], Array[Long]), Double)]
 
   def run(spark: SparkSession, edgesSym: DataFrame, n: Long, numPartitions: Int,
           maxIter: Int = 64,
           checkpointer: Option[graft.runtime.IterationCheckpointer] = None): CCResult = {
-    // persist edges hash-partitioned on dst: the per-round min_second gather
-    // joins on dst, so the (big) edge side is shuffled exactly once here
-    val edges = edgesSym.repartition(numPartitions, col("dst"))
-      .sortWithinPartitions("dst").persist() // sorted once: SMJ reuses it per round
-    edges.count()
-
-    var fState = Ckpt.materialize(
-      spark.range(n).repartition(numPartitions, col("id"))
-        .select(col("id"), col("id").as("v")))
-    var gpState = fState      // f is the identity map, so gp = f(f) = f
-    var iter = 0
-    var changed = true
-
-    while (changed && iter < maxIter) {
-      val f = fState.df
-      val gp = gpState.df
-      // mngp(i) = min_{j in N(i)} gp(j)   [min_second semiring mxv]
-      val gpl = gp.select(col("id").as("_j"), col("v").as("_gp"))
-      val mngp = edges.join(gpl, col("dst") === col("_j"))
-        .groupBy(col("src").as("id")).agg(min(col("_gp")).as("v"))
-
-      // hooking: f[fOld(i)] min= mngp(i); duplicate targets reduced by min
-      val scattered = f.select(col("id"), col("v").as("_t"))
-        .join(mngp, "id")
-        .groupBy(col("_t").as("id")).agg(min(col("v")).as("v"))
-
-      // f = min(f, scattered, mngp, gp) — formerly a CHAIN of three
-      // full-outer min-merge joins; min is associative/commutative and the
-      // merged id set is the union of the operands', so ONE union + hash
-      // min-aggregation produces the identical relation with a single
-      // exchange and one aggregation stage instead of three join stages
-      // (exact: component labels are int64)
-      val f1 = f.select(col("id"), col("v"))
-        .unionByName(scattered).unionByName(mngp)
-        .unionByName(gp.select(col("id"), col("v")))
-        .groupBy("id").agg(min(col("v")).as("v"))
-      val newFState = Ckpt.materialize(f1)
-
-      // gp = f[f], with the change flag (gp_new != gp) fused into the same
-      // materialization job   [notebook: ne(gp_dup & gp) + lor reduce]
-      val nf = newFState.df
-      val f2 = nf.select(col("id").as("_k"), col("v").as("_gv"))
-      val prev = gp.select(col("id").as("_pid"), col("v").as("_pv"))
-      val gpPlan = nf.join(f2, nf("v") === col("_k"))
-        .select(nf("id"), col("_gv").as("v"))
-        .join(prev, col("id") === col("_pid"))
-        .select(col("id"), col("v"),
-          when(col("v") =!= col("_pv"), 1.0).otherwise(0.0).as("_chg"))
-      val (newGpState, nChanged) = Ckpt.materializeWithSum(gpPlan, "_chg")
-      changed = nChanged > 0
-
-      // this round's inputs are no longer referenced — free their blocks
-      Seq(fState, gpState).distinct.foreach(_.release())
-      fState = newFState
-      gpState = newGpState
-      iter += 1
-      checkpointer.foreach(_.save(fState.df.select(col("id"), col("v")), iter,
-        Map("changed" -> nChanged.toLong.toString)))
+    val layout = VertexLayout(n, numPartitions)
+    val graph = CsrGraph.build(edgesSym, "dst", "src", layout)
+    val start = VertexLoop.init(spark.sparkContext, layout) { (k, m) =>
+      val f = Array.tabulate(m)(j => layout.vertex(k, j))
+      (f, f) // f is the identity map, so gp = f(f) = f
     }
-    edges.unpersist()
-    CCResult(fState.df.select(col("id"), col("v").as("component")), iter)
+    def parents(state: State, name: String) =
+      VertexLoop.frame(spark, layout, state, name, LongType)(_._1(_))
+    val run = VertexLoop.iterate(start, 0, maxIter, _ == 0)(round(graph, _)) {
+      (state, iter, changed) =>
+        checkpointer.foreach(_.save(parents(state, "v"), iter,
+          Map("changed" -> changed.toLong.toString)))
+    }
+    graph.unpersist()
+    CCResult(parents(run.state, "component"), run.rounds, run.converged)
+  }
+
+  private def round(graph: CsrGraph, state: State): (State, Seq[RDD[_]]) = {
+    val layout = graph.layout
+    val part = layout.partitioner
+    // mngp(i) = min_{j in N(i)} gp(j)   [min_second semiring mxv]
+    val mngp = graph.push(state) { (b, s) => b.push(r => s._2(b.src(r))) }
+      .reduceByKey(part, math.min(_, _))
+    // hooking: f[f(i)] min= mngp(i); duplicate targets reduced by min
+    val hooks = state.zipPartitions(mngp) { (ss, ms) =>
+      val f = ss.next()._1._1
+      ms.map { case (i, m) => (f(layout.slot(i)), m) }
+    }.reduceByKey(part, math.min(_, _))
+    // f = min(f, gp, mngp, hooks); read three times below, so kept
+    val f1 = state.zipPartitions(mngp, hooks) { (ss, ms, hs) =>
+      val (f, gp) = ss.next()._1
+      val out = Array.tabulate(f.length)(j => math.min(f(j), gp(j)))
+      (ms ++ hs).foreach { case (i, m) =>
+        val j = layout.slot(i)
+        if (m < out(j)) out(j) = m
+      }
+      Iterator(out)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    // gp = f[f]: vertex i asks the owner of f(i), which answers f(f(i))
+    val asks = f1.mapPartitionsWithIndex { (k, it) =>
+      val f = it.next()
+      Iterator.tabulate(f.length)(j => (f(j), layout.vertex(k, j)))
+    }.partitionBy(part)
+    val answers = f1.zipPartitions(asks) { (fs, as) =>
+      val f = fs.next()
+      as.map { case (t, i) => (i, f(layout.slot(t))) }
+    }.partitionBy(part)
+    // the change count (gp_new != gp) is the round's metric
+    val next = state.zipPartitions(f1, answers) { (ss, fs, as) =>
+      val gp = ss.next()._1._2
+      val f = fs.next()
+      val ngp = new Array[Long](f.length)
+      as.foreach { case (i, g) => ngp(layout.slot(i)) = g }
+      Iterator(((f, ngp), gp.indices.count(j => ngp(j) != gp(j)).toDouble))
+    }
+    (next, Seq(f1))
   }
 }

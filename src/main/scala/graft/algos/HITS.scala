@@ -15,8 +15,8 @@ final case class HitsResult(scores: DataFrame, iterations: Int)
   * — two `plus_second`-semiring mxv products (the same kernel family the
   * reference expresses them with) plus an L2 scalar reduction each.
   *
-  * Spark-first shape: BOTH gathers run the zero-exchange plan of
-  * `PageRank.run`, each against its own persisted CSR-bucket adjacency —
+  * Spark-first shape: BOTH gathers run a zero-exchange Catalyst plan
+  * (join on src, explode, map-side-combined dst sum), each against its own persisted CSR-bucket adjacency —
   * the forward adjacency for the authority step and the REVERSED (in-edge)
   * adjacency for the hub step. Building the transpose layout once at graph
   * build (its own single shuffle) is what keeps every iteration free of
@@ -27,7 +27,7 @@ final case class HitsResult(scores: DataFrame, iterations: Int)
   * sum-of-squares rides the SAME job that materializes the raw sums
   * (Ckpt.materializeWithSum), and the resulting norm is applied as a
   * driver-side constant divisor inside the NEXT gather's projection — two
-  * jobs per iteration total, the same count as a PageRank step pair.
+  * jobs per iteration total.
   *
   * Missing = absent throughout: a vertex with no in-edges has NO authority
   * entry (not an explicit 0), and a sink has no hub entry — GraphBLAS

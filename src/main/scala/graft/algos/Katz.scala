@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.core.Ckpt
 import graft.graph.Adjacency
 
+/** `finalDiff` is NaN when the last round computed no residual (the
+  * two-step rounds of `tol == 0`). */
 final case class KatzResult(scores: DataFrame, iterations: Int,
                             finalDiff: Double)
 
@@ -16,9 +18,9 @@ final case class KatzResult(scores: DataFrame, iterations: Int,
   * identical kernels (cf. `/root/reference/graphblas/core/matrix.py` mxv
   * and the Pagerank demo notebook's loop shape).
   *
-  * Spark-first shape: identical zero-exchange iteration plan to
-  * `PageRank.run` — the persisted CSR-bucket adjacency is joined on `src`
-  * with the hash-co-partitioned score vector (no exchange on either side),
+  * Spark-first shape: a zero-exchange Catalyst iteration plan — the
+  * persisted CSR-bucket adjacency is joined on `src` with the
+  * hash-co-partitioned score vector (no exchange on either side),
   * the per-source factor α·x(u) is projected BEFORE the explode (once per
   * source, not per generated edge row), and the dst partial sums are
   * map-side combined into the only shuffle of the round. Dense completion
@@ -42,12 +44,11 @@ object Katz {
         .select(col("id"), lit(beta).as("v")))
     var t = state.df
     var iter = 0
-    var diff = Double.MaxValue
+    var diff = Double.NaN
 
     // One Katz step as a plan; completion against the CACHED state's ids
     // (dense, invariant), so `prev` is referenced exactly once and steps
-    // chain without subtree recomputation — same discipline as
-    // PageRank.stepPlan.
+    // chain without subtree recomputation.
     def stepPlan(prev: DataFrame): DataFrame = {
       val contrib = adj.rows.alias("a")
         .join(prev.alias("s"), col("a.src") === col("s.id"))
@@ -63,8 +64,9 @@ object Katz {
 
     // Exact-iteration fast path (tol == 0): two chained steps per
     // materialized job — same scores, half the state materializations
-    // (see PageRank.run for the rationale and the measured effect).
-    while (tol == 0.0 && maxIter - iter >= 2) {
+    // (the state-cache write and the job round-trip are paid half as often).
+    val exactIters = tol == 0.0
+    while (exactIters && maxIter - iter >= 2) {
       val newState = Ckpt.materialize(stepPlan(stepPlan(t)))
       state.release()
       state = newState
@@ -72,7 +74,7 @@ object Katz {
       iter += 2
     }
 
-    while (iter < maxIter && diff > tol) {
+    while (iter < maxIter && !(diff <= tol)) {
       val contrib = adj.rows
         .join(t, adj.rows("src") === t("id"))
         .select(col("dsts"), (col("v") * alpha).as("c"))

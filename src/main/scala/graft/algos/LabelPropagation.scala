@@ -1,10 +1,13 @@
 package graft.algos
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.core.Ckpt
+import org.apache.spark.sql.types.LongType
+import graft.core.{CsrGraph, VertexLayout, VertexLoop, VertexPartitioner}
 
-final case class LPResult(labels: DataFrame, iterations: Int)
+/** `converged` is false when the loop stopped at `maxIter` with a round
+  * that still changed a label. */
+final case class LPResult(labels: DataFrame, iterations: Int, converged: Boolean)
 
 /** Synchronous label propagation with REAL LPA semantics: every vertex
   * starts with its own label; each round it adopts the MODE of its
@@ -14,8 +17,13 @@ final case class LPResult(labels: DataFrame, iterations: Int)
   * This is the reference's positional-semiring family (`any_secondi` /
   * `plus_pair`-histogram per label, `operator/semiring.py:185-218`): the
   * per-label vote count is a plus_pair gather keyed on (vertex, label), the
-  * argmax is the positional tie-broken reduction — expressed Spark-first as
-  * groupBy(vertex, label).count + min_by over struct(-count, label).
+  * argmax is the positional tie-broken reduction. On the block-cyclic
+  * vertex kernel (`graft.core.VertexLoop`) the labels are one long array
+  * per partition; along each edge (i, j) the vertex j pushes its label to
+  * i as the key (i << 32 | label), the round's only shuffle sums the votes
+  * per key with a map-side combine, and the owner of i keeps the best
+  * (count, label) per slot in two arrays of its own size. Packing the key
+  * needs n <= 2^32; a larger `n` fails before any job.
   *
   * Unlike min-label propagation (which re-derives connected components —
   * round-1 VERDICT flagged that redundancy), mode-LPA is the community-
@@ -27,42 +35,49 @@ final case class LPResult(labels: DataFrame, iterations: Int)
   */
 object LabelPropagation {
 
+  private type State = RDD[(Array[Long], Double)]
+
   def run(spark: SparkSession, edgesSym: DataFrame, n: Long, numPartitions: Int,
           maxIter: Int = 10,
           checkpointer: Option[graft.runtime.IterationCheckpointer] = None): LPResult = {
-    // gather side of the per-round vote join persisted pre-partitioned on dst
-    val edges = edgesSym.repartition(numPartitions, col("dst"))
-      .sortWithinPartitions("dst").persist() // sorted once: SMJ reuses it per round
-    edges.count()
-    var state = Ckpt.materialize(
-      spark.range(n).repartition(numPartitions, col("id"))
-        .select(col("id"), col("id").as("lbl")))
-    var iter = 0
-    var changed = true
-    while (changed && iter < maxIter) {
-      val l = state.df
-      val ll = l.select(col("id").as("_j"), col("lbl").as("_l"))
-      // histogram of neighbor labels per vertex (plus_pair over (i, label))
-      val votes = edges.join(ll, col("dst") === col("_j"))
-        .groupBy(col("src"), col("_l")).agg(count(lit(1)).as("_c"))
-      // mode with deterministic tie-break: max count, then min label — one
-      // min_by over the lexicographic struct (-count, label)
-      val nl = votes.groupBy(col("src").as("id"))
-        .agg(min_by(col("_l"), struct((-col("_c")).as("nc"), col("_l"))).as("_nl"))
-      val merged = l.join(nl, Seq("id"), "left_outer")
-        .select(col("id"),
-          coalesce(col("_nl"), col("lbl")).as("lbl"),
-          when(coalesce(col("_nl"), col("lbl")) =!= col("lbl"), 1.0)
-            .otherwise(0.0).as("_chg"))
-      val (newState, nChanged) = Ckpt.materializeWithSum(merged, "_chg")
-      changed = nChanged > 0
-      state.release()
-      state = newState
-      iter += 1
-      checkpointer.foreach(_.save(state.df.select(col("id"), col("lbl")), iter,
-        Map("changed" -> nChanged.toLong.toString)))
+    val layout = VertexLayout(n, numPartitions)
+    require(n <= (1L << 32), s"label propagation packs (vertex, label) into one long: " +
+      s"n = $n exceeds 2^32")
+    val graph = CsrGraph.build(edgesSym, "dst", "src", layout)
+    val start = VertexLoop.init(spark.sparkContext, layout) { (k, m) =>
+      Array.tabulate(m)(j => layout.vertex(k, j))
     }
-    edges.unpersist()
-    LPResult(state.df.select(col("id"), col("lbl").as("label")), iter)
+    def labels(state: State, name: String) =
+      VertexLoop.frame(spark, layout, state, name, LongType)(_(_))
+    val run = VertexLoop.iterate(start, 0, maxIter, _ == 0) { state =>
+      (round(graph, state), Nil)
+    } { (state, iter, changed) =>
+      checkpointer.foreach(_.save(labels(state, "lbl"), iter,
+        Map("changed" -> changed.toLong.toString)))
+    }
+    graph.unpersist()
+    LPResult(labels(run.state, "label"), run.rounds, run.converged)
+  }
+
+  private def round(graph: CsrGraph, state: State): State = {
+    val layout = graph.layout
+    // histogram of neighbor labels per vertex (plus_pair over (i, label))
+    val votes = graph.push(state) { (b, l) => b.push(r => l(b.src(r))) }
+      .map { case (i, x) => ((i << 32) | x, 1L) }
+      .reduceByKey(VertexPartitioner(layout.p, 32), _ + _)
+    // mode with deterministic tie-break: max count, then min label; the
+    // round's metric counts the changed labels
+    state.zipPartitions(votes) { (ls, vs) =>
+      val l = ls.next()._1
+      val count = new Array[Long](l.length)
+      val best = new Array[Long](l.length)
+      vs.foreach { case (key, c) =>
+        val j = layout.slot(key >>> 32)
+        val x = key & 0xFFFFFFFFL
+        if (c > count(j) || (c == count(j) && x < best(j))) { count(j) = c; best(j) = x }
+      }
+      val out = Array.tabulate(l.length)(j => if (count(j) > 0) best(j) else l(j))
+      Iterator((out, l.indices.count(j => out(j) != l(j)).toDouble))
+    }
   }
 }

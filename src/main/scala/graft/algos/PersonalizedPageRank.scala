@@ -15,11 +15,11 @@ import graft.graph.Adjacency
   *   loop: r = tp + damping · Aᵀ(r/d_out)
   *
   * Spark-first shape: the per-vertex teleport is carried as a third state
-  * column (`tp`) through the same zero-exchange loop — the seed set is
-  * broadcast-joined exactly ONCE at init, after which each iteration is the
-  * identical join(adjacency)→explode→partial-agg→left-outer-completion plan
-  * as plain PageRank with `col("tp")` in place of `lit(teleport)`. No extra
-  * join, shuffle, or job per iteration.
+  * column (`tp`) through a zero-exchange Catalyst loop — the seed set is
+  * broadcast-joined exactly ONCE at init, after which each iteration is a
+  * join(adjacency)→explode→partial-agg→left-outer-completion plan with
+  * `col("tp")` as the teleport term. No extra join, shuffle, or job per
+  * iteration.
   */
 object PersonalizedPageRank {
 
@@ -44,13 +44,12 @@ object PersonalizedPageRank {
     var state = Ckpt.materialize(init)
     var t = state.df
     var iter = 0
-    var rdiff = Double.MaxValue
+    var rdiff = Double.NaN
 
     // One PPR step as a plan. The completion universe is (id, tp) from the
     // CACHED state — `tp` never changes across iterations, so reading it
     // from `t` (instead of `prev`) keeps `prev` referenced exactly once and
-    // lets steps chain without subtree recomputation — same discipline as
-    // PageRank.stepPlan.
+    // lets steps chain without subtree recomputation.
     def stepPlan(prev: DataFrame): DataFrame = {
       val contrib = adj.rows.alias("a")
         .join(prev.alias("s"), col("a.src") === col("s.id"))
@@ -67,8 +66,10 @@ object PersonalizedPageRank {
 
     // Exact-iteration fast path (tol == 0): two chained steps per
     // materialized job — same scores, half the state materializations
-    // (see PageRank.run for the rationale and the measured effect).
-    while (tol == 0.0 && maxIter - iter >= 2) {
+    // (the state-cache write and the job round-trip are paid half as often).
+    // `finalRdiff` stays NaN when the last round was such a pair.
+    val exactIters = tol == 0.0
+    while (exactIters && maxIter - iter >= 2) {
       val newState = Ckpt.materialize(stepPlan(stepPlan(t)))
       state.release()
       state = newState
@@ -76,8 +77,8 @@ object PersonalizedPageRank {
       iter += 2
     }
 
-    while (iter < maxIter && rdiff > tol) {
-      // same gather as PageRank: per-source factor projected BELOW the
+    while (iter < maxIter && !(rdiff <= tol)) {
+      // the pagerank_3f gather: per-source factor projected BELOW the
       // explode (once per source, not once per generated edge row)
       val contrib = adj.rows
         .join(t, adj.rows("src") === t("id"))

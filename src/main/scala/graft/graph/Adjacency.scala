@@ -14,12 +14,15 @@ import org.apache.spark.storage.StorageLevel
   *
   *   (src: long, deg: long, dsts: array<long|int>)
   *
-  * `deg` is the FULL out-degree of src (not the chunk length), so PageRank's
+  * `deg` is the FULL out-degree of src (not the chunk length), so PPR's
   * per-edge contribution `score/deg` needs no extra degree join at
   * iteration time. NOTE the element type of `dsts` is INT whenever
   * numVertices fits (fromPacked's int-packing — half the shuffle/cache
   * bytes); consumers must cast the exploded element back to long before
-  * joining/aggregating against long-keyed state, as PageRank/PPR/HITS do.
+  * joining/aggregating against long-keyed state, as PPR/HITS/Katz do.
+  * PageRank reads `rows` once per run and cuts the edges into the vertex
+  * kernel's CSR blocks (`graft.core.CsrGraph`), which recount the full
+  * degree per block row.
   *
   * Hub salting: a vertex with out-degree above `maxChunk` is split into
   * ceil(deg/maxChunk) rows via arithmetic on dst (`dst % nChunks`) — no
@@ -31,7 +34,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * At 100 TB scale this layout is what makes iterative gather cheap: the big
   * adjacency is shuffled exactly once (at build), persisted partitioned by
-  * `src`; each iteration only shuffles the small score vector to meet it.
+  * `src`; each Catalyst-loop iteration only shuffles the small score vector
+  * to meet it.
   */
 final case class Adjacency(rows: DataFrame, numVertices: Long, numEdges: Long,
                            numPartitions: Int) {

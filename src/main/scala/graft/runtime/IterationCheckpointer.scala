@@ -1,6 +1,6 @@
 package graft.runtime
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -15,7 +15,10 @@ import scala.jdk.CollectionConverters._
   * blobs (`graphblas/core/ss/matrix.py:4050`); at cluster scale the
   * equivalent durable snapshot is partitioned parquet + manifest.
   *
-  * Layout: `<dir>/iter=N/` (parquet) + `<dir>/manifest_N.json`.
+  * Layout: `<dir>/iter=N/` (parquet) + `<dir>/manifest_N.json`. The
+  * manifest is written last, to a temp name that is then renamed
+  * atomically, so a save killed at any point leaves no manifest for its
+  * iteration and `latest` resumes from the previous complete one.
   */
 final class IterationCheckpointer(dir: String, every: Int = 1) {
 
@@ -31,7 +34,9 @@ final class IterationCheckpointer(dir: String, every: Int = 1) {
     val json =
       s"""{"iteration":$iteration,"path":"$path","metrics":$met,"partitions":$perPart}"""
     Files.createDirectories(Paths.get(dir))
-    Files.writeString(Paths.get(s"$dir/manifest_$iteration.json"), json)
+    val tmp = Files.writeString(Paths.get(s"$dir/manifest_$iteration.json.tmp"), json)
+    Files.move(tmp, Paths.get(s"$dir/manifest_$iteration.json"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Latest snapshot, or None if no checkpoint exists yet. */
@@ -40,8 +45,7 @@ final class IterationCheckpointer(dir: String, every: Int = 1) {
     if (!Files.isDirectory(d)) return None
     val iters = Files.list(d).iterator().asScala
       .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("manifest_") =>
-        s.stripPrefix("manifest_").stripSuffix(".json").toInt }
+      .collect { case IterationCheckpointer.Manifest(it) => it.toInt }
       .toSeq
     if (iters.isEmpty) None
     else {
@@ -49,4 +53,9 @@ final class IterationCheckpointer(dir: String, every: Int = 1) {
       Some((it, spark.read.parquet(s"$dir/iter=$it")))
     }
   }
+}
+
+object IterationCheckpointer {
+  /** A complete manifest's file name; a save's temp file does not match. */
+  private val Manifest = """manifest_(\d+)\.json""".r
 }

@@ -78,61 +78,63 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     scannedCols.foreach(cols => assert(!cols.contains("v"), s"scan reads $cols"))
   }
 
-  test("PageRank loop: convergence path materializes ONE exchange per step, " +
-    "exact-iteration path TWO per double-step; never an adjacency re-sort") {
-    import org.apache.spark.sql.GraftSqlShims
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    // deterministic per-iteration plan: AQE must not coalesce the agg
-    // exchange away from the declared partition count (the production
-    // ScalingBench sessions pin the same flag; the rewrap's partition-count
-    // guard would otherwise — correctly — drop the partitioning metadata)
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    GraftSqlShims.captureMaterializedPlans = true
+  test("PageRank: one Kryo shuffle per round between states; CSR blocks built once") {
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.serializer.KryoSerializer
+    val e = (0 until 400).map(i => ((i % 57).toLong, ((i * 13 + 5) % 57).toLong))
+      .filter { case (s, d) => s != d }.toDF("src", "dst").distinct()
+    val adj = graft.graph.Adjacency.build(e, 57, 4)
     try {
-      val e = (0 until 400).map(i => ((i % 57).toLong, ((i * 13 + 5) % 57).toLong))
-        .filter { case (s, d) => s != d }.toDF("src", "dst").distinct()
-      val adj = graft.graph.Adjacency.build(e, 57,
-        spark.sessionState.conf.numShufflePartitions)
-      try {
-        // flatten across AQE query-stage boundaries; stop at cache leaves
-        def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-          case q: QueryStageExec => nodes(q.plan)
-          case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-          case other => other.children.flatMap(nodes)
-        })
-        def checkLast(expectExchanges: Int, what: String): Unit = {
-          val last = GraftSqlShims.lastMaterializedPlan.get
-          val all = nodes(last)
-          val exchanges = all.collect { case x: ShuffleExchangeLike => x }
-          assert(exchanges.size == expectExchanges,
-            s"$what: expected $expectExchanges dst-agg exchange(s), " +
-              s"got ${exchanges.size}:\n$last")
-          // no SortExec may sit above the persisted adjacency scan — its
-          // build-time sort order must be reused by the gather join
-          val adjResort = all.collect { case s: SortExec => s }.exists(s =>
-            nodes(s).exists(_.isInstanceOf[InMemoryTableScanExec]))
-          assert(!adjResort, s"$what: adjacency re-sorted per iteration:\n$last")
+      // lineage of one round, from the new state back to the old state and
+      // the persisted blocks
+      val layout = VertexLayout(57, 4)
+      val graph = CsrGraph.build(adj.rows.select(col("src"), explode(col("dsts")).as("dst")),
+        "src", "dst", layout)
+      val state = VertexLoop.init(spark.sparkContext, layout)((_, k) => Array.fill(k)(1.0 / 57))
+      val next = graft.algos.PageRank.step(graph, state, 0.85, 0.15 / 57)
+      val shuffles = scala.collection.mutable.Buffer[ShuffleDependency[_, _, _]]()
+      val reached = scala.collection.mutable.Set[Int]()
+      def walk(r: RDD[_]): Unit =
+        if (r.id == state.id || r.id == graph.blocks.id) reached += r.id
+        else r.dependencies.foreach { d =>
+          d match {
+            case s: ShuffleDependency[_, _, _] => shuffles += s
+            case _ =>
+          }
+          walk(d.rdd)
         }
-        // convergence path (tol > 0): one step per materialization, one
-        // exchange (the dst agg) per step
-        graft.algos.PageRank.run(spark, adj, tol = 1e-300, maxIter = 2)
-        checkLast(1, "convergence path")
-        // exact-iteration path (tol == 0, no checkpointer): TWO chained
-        // steps per materialization — two dst-agg exchanges, still one per
-        // iteration, and half the state materializations
-        graft.algos.PageRank.run(spark, adj, tol = 0.0, maxIter = 2)
-        checkLast(2, "exact-iteration double-step")
-      } finally adj.unpersist()
-    } finally {
-      GraftSqlShims.captureMaterializedPlans = false
-      GraftSqlShims.lastMaterializedPlan = None
-      spark.conf.set(key, old)
-    }
+      walk(next)
+      assert(reached == Set(state.id, graph.blocks.id))
+      assert(shuffles.size == 1, s"one shuffle per round, got ${shuffles.size}")
+      // (Long, Double) records: Spark picks Kryo by itself
+      assert(shuffles.head.serializer.isInstanceOf[KryoSerializer])
+      graph.unpersist()
+
+      // a whole run: one job per round, and one shuffle-map stage per round
+      // plus the blocks' build — never a reshuffle of the blocks
+      val (res, counts) =
+        org.apache.spark.JobCounts(spark)(graft.algos.PageRank.run(spark, adj, tol = 0.0, maxIter = 3))
+      assert(res.iterations == 3)
+      assert(counts.jobs.get == 3)
+      assert(counts.shuffleStages.get == 3 + 1)
+    } finally adj.unpersist()
+  }
+
+  test("CC and LP run one job per round") {
+    val path = (0L until 40L).map(i => (i, i + 1))
+    val sym = (path ++ path.map(_.swap)).toDF("src", "dst").persist()
+    try {
+      sym.count()
+      val (cc, ccJobs) = org.apache.spark.JobCounts(spark)(
+        graft.algos.ConnectedComponents.run(spark, sym, 45, 4))
+      assert(cc.converged && cc.iterations > 1)
+      assert(ccJobs.jobs.get == cc.iterations)
+      val (lp, lpJobs) = org.apache.spark.JobCounts(spark)(
+        graft.algos.LabelPropagation.run(spark, sym, 45, 4, maxIter = 5))
+      assert(lp.iterations == 5)
+      assert(lpJobs.jobs.get == lp.iterations)
+    } finally sym.unpersist()
   }
 
   test("Eigenvector iteration rides the same zero-exchange loop as PageRank " +

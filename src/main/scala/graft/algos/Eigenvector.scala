@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Ckpt
 import graft.graph.Adjacency
 
 final case class EigenvectorResult(scores: DataFrame, iterations: Int)
@@ -20,15 +19,14 @@ final case class EigenvectorResult(scores: DataFrame, iterations: Int)
   * textbook loop applies only changes the vector's length, never its
   * direction — x_k/.‖x_k‖ = (I+Aᵀ)^k x₀ / ‖(I+Aᵀ)^k x₀‖ exactly. The loop
   * therefore runs unnormalized (one fused materialization per round, no
-  * extra norm job) and divides by the L2 norm ONCE at the end, via a 1×1
-  * cross join — not a driver collect, not a global window. FP64 headroom:
+  * extra norm job) and divides by the L2 norm ONCE at the end, via a lazy
+  * 1×1 cross join — not a driver collect, not a global window. FP64 headroom:
   * the unnormalized magnitude grows like (1+λ_max)^k ≤ (1+Δ)^k; for the
   * default 5 rounds that overflows only past Δ ≈ 10^61 — unreachable.
   *
-  * Spark-first shape (identical to [[Katz]]): the persisted CSR-bucket
-  * adjacency joins the hash-co-partitioned score vector zero-exchange, the
-  * per-source score is projected BEFORE the explode, and the dst partial
-  * sums map-side combine into the round's only shuffle.
+  * It runs as the `LinearRecurrence` with self = 1 and w = 1, from
+  * x₀ = 1/n, on the block-cyclic vertex kernel: one shuffle and one job per
+  * round.
   *
   * Fixed `maxIter` rounds (the oracle-unroll discipline shared with
   * `pagerank_iter5`/`katz_centrality`). Output (id, v), ‖v‖₂ = 1.
@@ -38,31 +36,11 @@ object Eigenvector {
   def run(spark: SparkSession, adj: Adjacency,
           maxIter: Int = 5): EigenvectorResult = {
     val n = adj.numVertices
-    val p = adj.numPartitions
-
-    var state = Ckpt.materialize(
-      spark.range(n).repartition(p, col("id"))
-        .select(col("id"), lit(1.0 / n).as("v")))
-    var iter = 0
-    while (iter < maxIter) {
-      val t = state.df
-      val contrib = adj.rows
-        .join(t, adj.rows("src") === t("id"))
-        .select(col("dsts"), col("v").as("c"))
-        .select(explode(col("dsts")).as("_dn"), col("c"))
-        .select(col("_dn").cast("long").as("dst"), col("c"))
-      val gathered = contrib.groupBy("dst").agg(sum(col("c")).as("g"))
-      val stepped = t
-        .join(gathered, t("id") === gathered("dst"), "left_outer")
-        .select(col("id"), (col("v") + coalesce(col("g"), lit(0.0))).as("v"))
-      val newState = Ckpt.materialize(stepped)
-      state.release()
-      state = newState
-      iter += 1
-    }
-    val norm = state.df.agg(sqrt(sum(col("v") * col("v"))).as("_n"))
-    val scores = state.df.crossJoin(norm)
+    val r = LinearRecurrence(0.0, 1.0, self = 1.0)
+      .run(spark, adj, tol = 0.0, maxIter)(_ => 1.0 / n)
+    val norm = r.scores.agg(sqrt(sum(col("v") * col("v"))).as("_n"))
+    val scores = r.scores.crossJoin(norm)
       .select(col("id"), (col("v") / col("_n")).as("v"))
-    EigenvectorResult(scores, iter)
+    EigenvectorResult(scores, r.iterations)
   }
 }

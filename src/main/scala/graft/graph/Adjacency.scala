@@ -14,15 +14,14 @@ import org.apache.spark.storage.StorageLevel
   *
   *   (src: long, deg: long, dsts: array<long|int>)
   *
-  * `deg` is the FULL out-degree of src (not the chunk length), so PPR's
-  * per-edge contribution `score/deg` needs no extra degree join at
-  * iteration time. NOTE the element type of `dsts` is INT whenever
-  * numVertices fits (fromPacked's int-packing — half the shuffle/cache
-  * bytes); consumers must cast the exploded element back to long before
-  * joining/aggregating against long-keyed state, as PPR/HITS/Katz do.
-  * PageRank reads `rows` once per run and cuts the edges into the vertex
-  * kernel's CSR blocks (`graft.core.CsrGraph`), which recount the full
-  * degree per block row.
+  * `deg` is the FULL out-degree of src (not the chunk length). NOTE the
+  * element type of `dsts` is INT whenever numVertices fits (fromPacked's
+  * int-packing — half the shuffle/cache bytes); consumers must cast the
+  * exploded element back to long before joining/aggregating against
+  * long-keyed state, as HITS does. The linear recurrences (PageRank, PPR,
+  * Katz, Eigenvector; `graft.algos.LinearRecurrence`) read `rows` once per
+  * run and cut the edges into the vertex kernel's CSR blocks
+  * (`graft.core.CsrGraph`), which recount the full degree per block row.
   *
   * Hub salting: a vertex with out-degree above `maxChunk` is split into
   * ceil(deg/maxChunk) rows via arithmetic on dst (`dst % nChunks`) — no

@@ -1,8 +1,10 @@
 package graft.runtime
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
 /** Resumable iteration state: per-iteration parquet snapshot of the
@@ -18,7 +20,9 @@ import scala.jdk.CollectionConverters._
   * Layout: `<dir>/iter=N/` (parquet) + `<dir>/manifest_N.json`. The
   * manifest is written last, to a temp name that is then renamed
   * atomically, so a save killed at any point leaves no manifest for its
-  * iteration and `latest` resumes from the previous complete one.
+  * iteration and `latest` resumes from the previous complete one. A save
+  * is one Spark job, the write: the manifest's row counts come from the
+  * written files' parquet footers.
   */
 final class IterationCheckpointer(dir: String, every: Int = 1) {
 
@@ -26,9 +30,8 @@ final class IterationCheckpointer(dir: String, every: Int = 1) {
     if (iteration % every != 0) return
     val path = s"$dir/iter=$iteration"
     scores.write.mode("overwrite").parquet(path)
-    val perPart = scores.groupBy(spark_partition_id().as("pid"))
-      .agg(count(lit(1)).as("rows")).collect()
-      .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
+    val perPart = IterationCheckpointer.rowsPerPartition(scores.sparkSession, path)
+      .map { case (pid, rows) => s"""{"partition":$pid,"rows":$rows}""" }
       .mkString("[", ",", "]")
     val met = metrics.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     val json =
@@ -58,4 +61,21 @@ final class IterationCheckpointer(dir: String, every: Int = 1) {
 object IterationCheckpointer {
   /** A complete manifest's file name; a save's temp file does not match. */
   private val Manifest = """manifest_(\d+)\.json""".r
+  /** A data file of a parquet write, named after the partition its task wrote. */
+  private val PartFile = """part-(\d+)-.*\.parquet""".r
+
+  /** The non-zero row count of each partition a parquet write at `path`
+    * wrote, summed from its files' footers on the driver (no Spark job). */
+  private def rowsPerPartition(spark: SparkSession, path: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    dir.getFileSystem(conf).listStatus(dir).toSeq.flatMap { f =>
+      f.getPath.getName match {
+        case PartFile(pid) =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+          try Some(pid.toInt -> reader.getRecordCount) finally reader.close()
+        case _ => None
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 > 0).sorted
+  }
 }

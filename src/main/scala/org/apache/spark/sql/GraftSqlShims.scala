@@ -36,17 +36,6 @@ object GraftSqlShims {
   def cacheManagerIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.isEmpty
 
-  /** Test hook: the AQE-final executed plan of the most recent
-    * cachedDataFrame materialization. RDD-level actions (toRdd + count) do
-    * not fire QueryExecutionListener, so plan-shape tests pinning the
-    * zero-exchange iteration loop read the plan from here instead.
-    * OFF by default: retaining a plan tree in production would keep its
-    * broadcast/query-stage results reachable indefinitely (and concurrent
-    * sessions would race on the slot) — tests flip `captureMaterializedPlans`
-    * around the run they inspect. */
-  @volatile var captureMaterializedPlans: Boolean = false
-  @volatile var lastMaterializedPlan: Option[execution.SparkPlan] = None
-
   /** Column ↔ Expression bridges for graft's custom Catalyst expressions
     * (ExpressionUtils is private[sql]). */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -116,7 +105,6 @@ object GraftSqlShims {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    if (captureMaterializedPlans) lastMaterializedPlan = Some(exec)
     val out = cdf.queryExecution.analyzed.output
     val mapping = exec.output.zip(out).toMap
     val outSet = AttributeSet(out)

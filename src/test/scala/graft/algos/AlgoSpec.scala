@@ -47,8 +47,7 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
     }
   }
 
-  test("PageRank exact-iteration fast path (tol=0 double-step) matches the " +
-    "recurrence at even AND odd iteration counts") {
+  test("PageRank with tol = 0 matches the recurrence at even AND odd round counts") {
     val rnd = new scala.util.Random(7)
     val n = 60
     val edges = (for (_ <- 0 until 400) yield
@@ -56,7 +55,7 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
       .distinct.filter { case (s, d) => s != d }
     val adj = Adjacency.build(edges.toDF("src", "dst"), n, 4, maxChunk = 8)
     try {
-      // 4 = two double-steps; 5 = two double-steps + one single step
+      // an even and an odd round count
       Seq(4, 5).foreach { k =>
         val res = PageRank.run(spark, adj, damping = 0.85, tol = 0.0, maxIter = k)
         assert(res.iterations == k)

@@ -162,11 +162,15 @@ class VertexKernelSpec extends AnyFunSuite with SparkTest {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L)).toDF("src", "dst")
     val adj = Adjacency.build(edges, 4, 2)
     try {
-      assert(Katz.run(spark, adj, tol = 0.0, maxIter = 2).finalDiff.isNaN)
-      assert(!Katz.run(spark, adj, tol = 0.0, maxIter = 3).finalDiff.isNaN)
       val seeds = spark.range(1).toDF("id")
-      assert(PersonalizedPageRank.run(spark, adj, seeds, tol = 0.0, maxIter = 2).finalRdiff.isNaN)
-      assert(!PersonalizedPageRank.run(spark, adj, seeds, tol = 0.0, maxIter = 3).finalRdiff.isNaN)
+      // no round runs at maxIter = 0
+      assert(Katz.run(spark, adj, tol = 0.0, maxIter = 0).finalDiff.isNaN)
+      assert(PersonalizedPageRank.run(spark, adj, seeds, tol = 0.0, maxIter = 0).finalRdiff.isNaN)
+      for (k <- Seq(2, 3)) {
+        assert(Katz.run(spark, adj, tol = 0.0, maxIter = k).finalDiff.isFinite, s"k=$k")
+        assert(PersonalizedPageRank.run(spark, adj, seeds, tol = 0.0, maxIter = k)
+          .finalRdiff.isFinite, s"k=$k")
+      }
     } finally adj.unpersist()
   }
 }

@@ -92,7 +92,7 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       val graph = CsrGraph.build(adj.rows.select(col("src"), explode(col("dsts")).as("dst")),
         "src", "dst", layout)
       val state = VertexLoop.init(spark.sparkContext, layout)((_, k) => Array.fill(k)(1.0 / 57))
-      val next = graft.algos.PageRank.step(graph, state, 0.85, 0.15 / 57)
+      val next = graft.algos.LinearRecurrence(0.15 / 57, 0.85, perDegree = true).round(graph, state)
       val shuffles = scala.collection.mutable.Buffer[ShuffleDependency[_, _, _]]()
       val reached = scala.collection.mutable.Set[Int]()
       def walk(r: RDD[_]): Unit =
@@ -121,9 +121,10 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     } finally adj.unpersist()
   }
 
-  test("CC and LP run one job per round") {
+  test("vertex loops run one job per round: CC, LP, Katz, PPR, Eigenvector") {
     val path = (0L until 40L).map(i => (i, i + 1))
     val sym = (path ++ path.map(_.swap)).toDF("src", "dst").persist()
+    val adj = graft.graph.Adjacency.build(sym, 45, 4)
     try {
       sym.count()
       val (cc, ccJobs) = org.apache.spark.JobCounts(spark)(
@@ -134,46 +135,21 @@ class PlanSpec extends AnyFunSuite with SparkTest {
         graft.algos.LabelPropagation.run(spark, sym, 45, 4, maxIter = 5))
       assert(lp.iterations == 5)
       assert(lpJobs.jobs.get == lp.iterations)
-    } finally sym.unpersist()
-  }
-
-  test("Eigenvector iteration rides the same zero-exchange loop as PageRank " +
-    "(one dst-agg exchange, no adjacency re-sort)") {
-    import org.apache.spark.sql.GraftSqlShims
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    GraftSqlShims.captureMaterializedPlans = true
-    try {
-      val e = (0 until 400).map(i => ((i % 57).toLong, ((i * 13 + 5) % 57).toLong))
-        .filter { case (s, d) => s != d }.toDF("src", "dst").distinct()
-      val adj = graft.graph.Adjacency.build(e, 57,
-        spark.sessionState.conf.numShufflePartitions)
-      try {
-        graft.algos.Eigenvector.run(spark, adj, maxIter = 2)
-        val last = GraftSqlShims.lastMaterializedPlan.get
-        def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-          case q: QueryStageExec => nodes(q.plan)
-          case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-          case other => other.children.flatMap(nodes)
-        })
-        val all = nodes(last)
-        val exchanges = all.collect { case x: ShuffleExchangeLike => x }
-        assert(exchanges.size == 1,
-          s"expected exactly the dst-agg exchange, got ${exchanges.size}:\n$last")
-        val adjResort = all.collect { case s: SortExec => s }.exists(s =>
-          nodes(s).exists(_.isInstanceOf[InMemoryTableScanExec]))
-        assert(!adjResort, s"adjacency re-sorted per iteration:\n$last")
-      } finally adj.unpersist()
-    } finally {
-      GraftSqlShims.captureMaterializedPlans = false
-      GraftSqlShims.lastMaterializedPlan = None
-      spark.conf.set(key, old)
-    }
+      val (katz, katzJobs) = org.apache.spark.JobCounts(spark)(
+        graft.algos.Katz.run(spark, adj, alpha = 0.1, tol = 1e-6))
+      assert(katz.iterations > 1 && katz.finalDiff <= 1e-6)
+      assert(katzJobs.jobs.get == katz.iterations)
+      // a local seed frame is read on the driver with no job
+      val (ppr, pprJobs) = org.apache.spark.JobCounts(spark)(
+        graft.algos.PersonalizedPageRank.run(spark, adj, Seq(0L, 7L).toDF("id"),
+          tol = 0.0, maxIter = 4))
+      assert(ppr.iterations == 4)
+      assert(pprJobs.jobs.get == ppr.iterations)
+      val (eig, eigJobs) = org.apache.spark.JobCounts(spark)(
+        graft.algos.Eigenvector.run(spark, adj, maxIter = 3))
+      assert(eig.iterations == 3)
+      assert(eigJobs.jobs.get == eig.iterations)
+    } finally { adj.unpersist(); sym.unpersist() }
   }
 
   test("ewise filters push below the join (predicate pushdown intact)") {

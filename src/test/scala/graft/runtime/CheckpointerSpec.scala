@@ -25,4 +25,18 @@ class CheckpointerSpec extends AnyFunSuite with SparkTest {
     assert(!Files.exists(dir.resolve("manifest_5.json.tmp")))
     assert(ck.latest(spark).get._1 == 5)
   }
+
+  test("a save is one job; the manifest lists each non-empty partition's rows") {
+    val dir = Files.createTempDirectory("graft-ckpt-jobs")
+    val ck = new IterationCheckpointer(dir.toString)
+    // range splits 10 rows over 4 partitions as 2, 3, 2, 3; the filter
+    // empties partition 2 (ids 5 and 6)
+    val scores = spark.range(0, 10, 1, 4).filter($"id" < 5 || $"id" > 6)
+      .select($"id", ($"id" * 0.5).as("v"))
+    val (_, counts) = org.apache.spark.JobCounts(spark)(ck.save(scores, 1, Map.empty))
+    assert(counts.jobs.get == 1)
+    val json = Files.readString(dir.resolve("manifest_1.json"))
+    assert(json.contains(""""partitions":[{"partition":0,"rows":2},""" +
+      """{"partition":1,"rows":3},{"partition":3,"rows":3}]"""), json)
+  }
 }

@@ -121,10 +121,9 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     } finally adj.unpersist()
   }
 
-  test("vertex loops run one job per round: CC, LP, Katz, PPR, Eigenvector") {
+  test("CC and LP run one job per round") {
     val path = (0L until 40L).map(i => (i, i + 1))
     val sym = (path ++ path.map(_.swap)).toDF("src", "dst").persist()
-    val adj = graft.graph.Adjacency.build(sym, 45, 4)
     try {
       sym.count()
       val (cc, ccJobs) = org.apache.spark.JobCounts(spark)(
@@ -135,6 +134,14 @@ class PlanSpec extends AnyFunSuite with SparkTest {
         graft.algos.LabelPropagation.run(spark, sym, 45, 4, maxIter = 5))
       assert(lp.iterations == 5)
       assert(lpJobs.jobs.get == lp.iterations)
+    } finally sym.unpersist()
+  }
+
+  test("Katz and PPR run one job per round") {
+    val path = (0L until 40L).map(i => (i, i + 1))
+    val sym = (path ++ path.map(_.swap)).toDF("src", "dst")
+    val adj = graft.graph.Adjacency.build(sym, 45, 4)
+    try {
       val (katz, katzJobs) = org.apache.spark.JobCounts(spark)(
         graft.algos.Katz.run(spark, adj, alpha = 0.1, tol = 1e-6))
       assert(katz.iterations > 1 && katz.finalDiff <= 1e-6)
@@ -145,11 +152,48 @@ class PlanSpec extends AnyFunSuite with SparkTest {
           tol = 0.0, maxIter = 4))
       assert(ppr.iterations == 4)
       assert(pprJobs.jobs.get == ppr.iterations)
-      val (eig, eigJobs) = org.apache.spark.JobCounts(spark)(
+    } finally adj.unpersist()
+  }
+
+  test("Eigenvector iteration rides the same zero-exchange loop as PageRank " +
+    "(one dst-agg exchange, no adjacency re-sort)") {
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
+    val e = (0 until 400).map(i => ((i % 57).toLong, ((i * 13 + 5) % 57).toLong))
+      .filter { case (s, d) => s != d }.toDF("src", "dst").distinct()
+    val adj = graft.graph.Adjacency.build(e, 57, 4)
+    try {
+      // one Eigenvector round (self = 1, w = 1) reaches the old state and the
+      // persisted blocks through exactly one shuffle: the dst aggregation
+      val layout = VertexLayout(57, 4)
+      val graph = CsrGraph.build(adj.rows.select(col("src"), explode(col("dsts")).as("dst")),
+        "src", "dst", layout)
+      val state = VertexLoop.init(spark.sparkContext, layout)((_, k) => Array.fill(k)(1.0 / 57))
+      val next = graft.algos.LinearRecurrence(0.0, 1.0, self = 1.0).round(graph, state)
+      val shuffles = scala.collection.mutable.Buffer[ShuffleDependency[_, _, _]]()
+      val reached = scala.collection.mutable.Set[Int]()
+      def walk(r: RDD[_]): Unit =
+        if (r.id == state.id || r.id == graph.blocks.id) reached += r.id
+        else r.dependencies.foreach { d =>
+          d match {
+            case s: ShuffleDependency[_, _, _] => shuffles += s
+            case _ =>
+          }
+          walk(d.rdd)
+        }
+      walk(next)
+      assert(reached == Set(state.id, graph.blocks.id))
+      assert(shuffles.size == 1, s"expected exactly the dst-agg shuffle, got ${shuffles.size}")
+      graph.unpersist()
+
+      // a whole run: one job and one shuffle-map stage per round, plus the
+      // blocks' build — the adjacency is never reshuffled or re-sorted
+      val (eig, counts) = org.apache.spark.JobCounts(spark)(
         graft.algos.Eigenvector.run(spark, adj, maxIter = 3))
       assert(eig.iterations == 3)
-      assert(eigJobs.jobs.get == eig.iterations)
-    } finally { adj.unpersist(); sym.unpersist() }
+      assert(counts.jobs.get == eig.iterations)
+      assert(counts.shuffleStages.get == eig.iterations + 1)
+    } finally adj.unpersist()
   }
 
   test("ewise filters push below the join (predicate pushdown intact)") {

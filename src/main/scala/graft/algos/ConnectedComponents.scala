@@ -1,5 +1,6 @@
 package graft.algos
 
+import scala.collection.mutable.ArrayBuilder
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.LongType
@@ -26,11 +27,12 @@ final case class CCResult(components: DataFrame, iterations: Int, converged: Boo
   * the block-cyclic vertex kernel (`graft.core.VertexLoop`): f and gp are
   * two long arrays per partition, and the edges are CSR blocks keyed by
   * `dst`, so along each edge (i, j) the vertex j pushes gp(j) to i. A round
-  * is one job over four vertex-keyed shuffles, all (Long, Long): the pushes
-  * min-combined to their targets (mngp), the hooks min-combined to f(i),
-  * and the request and answer of the pointer jump gp = f[f]. The change
-  * count rides the job that materializes the new (f, gp). Converges in
-  * O(log n) rounds.
+  * is one job over four `VertexLoop.exchange`s, each one primitive array
+  * per partition pair: the pushes and then the hooks, each sent as a dense
+  * min-array over the target partition's slots (`Long.MaxValue` for none),
+  * and the asks and answers of the pointer jump gp = f[f], the asks as
+  * slots and the answers in the order asked. The change count rides the
+  * job that materializes the new (f, gp). Converges in O(log n) rounds.
   */
 object ConnectedComponents {
 
@@ -58,40 +60,66 @@ object ConnectedComponents {
 
   private def round(graph: CsrGraph, state: State): (State, Seq[RDD[_]]) = {
     val layout = graph.layout
-    val part = layout.partitioner
+    val p = layout.p
+    // per target partition, the least value sent to each of its slots
+    def mins(send: ((Long, Long) => Unit) => Unit): Array[Array[Long]] = {
+      val out = Array.tabulate(p)(t => Array.fill(layout.slots(t))(Long.MaxValue))
+      send { (v, x) =>
+        val a = out(layout.part(v))
+        val j = layout.slot(v)
+        if (x < a(j)) a(j) = x
+      }
+      out
+    }
+    def least(in: Array[Array[Long]]): Array[Long] = {
+      val m = in.head.clone()
+      in.tail.foreach { a =>
+        var j = 0
+        while (j < m.length) { if (a(j) < m(j)) m(j) = a(j); j += 1 }
+      }
+      m
+    }
     // mngp(i) = min_{j in N(i)} gp(j)   [min_second semiring mxv]
-    val mngp = graph.push(state) { (b, s) => b.push(r => s._2(b.src(r))) }
-      .reduceByKey(part, math.min(_, _))
+    val mngp = VertexLoop.exchange(graph.blocks.zipPartitions(state) { (bs, ss) =>
+      val gp = ss.next()._1._2
+      Iterator(mins(put => bs.foreach(b => b.foreachEdge((r, i) => put(i, gp(b.src(r)))))))
+    }, p).map(least)
     // hooking: f[f(i)] min= mngp(i); duplicate targets reduced by min
-    val hooks = state.zipPartitions(mngp) { (ss, ms) =>
+    val hooks = VertexLoop.exchange(state.zipPartitions(mngp) { (ss, ms) =>
       val f = ss.next()._1._1
-      ms.map { case (i, m) => (f(layout.slot(i)), m) }
-    }.reduceByKey(part, math.min(_, _))
+      val m = ms.next()
+      Iterator(mins(put => f.indices.foreach(j => put(f(j), m(j)))))
+    }, p).map(least)
     // f = min(f, gp, mngp, hooks); read three times below, so kept
     val f1 = state.zipPartitions(mngp, hooks) { (ss, ms, hs) =>
       val (f, gp) = ss.next()._1
-      val out = Array.tabulate(f.length)(j => math.min(f(j), gp(j)))
-      (ms ++ hs).foreach { case (i, m) =>
-        val j = layout.slot(i)
-        if (m < out(j)) out(j) = m
-      }
-      Iterator(out)
+      val m = ms.next()
+      val h = hs.next()
+      Iterator(Array.tabulate(f.length)(j => math.min(math.min(f(j), gp(j)), math.min(m(j), h(j)))))
     }.persist(StorageLevel.MEMORY_AND_DISK)
-    // gp = f[f]: vertex i asks the owner of f(i), which answers f(f(i))
-    val asks = f1.mapPartitionsWithIndex { (k, it) =>
-      val f = it.next()
-      Iterator.tabulate(f.length)(j => (f(j), layout.vertex(k, j)))
-    }.partitionBy(part)
-    val answers = f1.zipPartitions(asks) { (fs, as) =>
+    // gp = f[f]: each slot asks the owner of f(i) for slot(f(i)), which
+    // answers f(f(i)) in the order asked
+    val asks = VertexLoop.exchange(f1.map { f =>
+      val out = Array.fill(p)(new ArrayBuilder.ofInt)
+      f.foreach(v => out(layout.part(v)) += layout.slot(v))
+      out.map(_.result())
+    }, p)
+    val answers = VertexLoop.exchange(f1.zipPartitions(asks) { (fs, as) =>
       val f = fs.next()
-      as.map { case (t, i) => (i, f(layout.slot(t))) }
-    }.partitionBy(part)
+      Iterator(as.next().map(_.map(f(_))))
+    }, p)
     // the change count (gp_new != gp) is the round's metric
     val next = state.zipPartitions(f1, answers) { (ss, fs, as) =>
       val gp = ss.next()._1._2
       val f = fs.next()
-      val ngp = new Array[Long](f.length)
-      as.foreach { case (i, g) => ngp(layout.slot(i)) = g }
+      val ans = as.next()
+      val taken = new Array[Int](p)
+      val ngp = f.map { v =>
+        val t = layout.part(v)
+        val g = ans(t)(taken(t))
+        taken(t) += 1
+        g
+      }
       Iterator(((f, ngp), gp.indices.count(j => ngp(j) != gp(j)).toDouble))
     }
     (next, Seq(f1))

@@ -1,10 +1,9 @@
 package graft.core
 
-import java.util.Arrays
 import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 import org.apache.spark.{Partitioner, SparkContext}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -27,7 +26,7 @@ final case class VertexLayout(n: Long, p: Int) {
   def slot(v: Long): Int = (v / p).toInt
   def vertex(part: Int, slot: Int): Long = slot.toLong * p + part
   def slots(part: Int): Int = if (part >= n) 0 else ((n - 1 - part) / p + 1).toInt
-  def partitioner: Partitioner = VertexPartitioner(p, 0)
+  def partitioner: Partitioner = VertexPartitioner(p)
 }
 
 object VertexLayout {
@@ -35,11 +34,10 @@ object VertexLayout {
   val MaxSlots: Long = Int.MaxValue - 8
 }
 
-/** Sends a record to the owner of the vertex held in its long key's bits
-  * above `shift` (0 for a plain vertex key). */
-final case class VertexPartitioner(p: Int, shift: Int) extends Partitioner {
+/** Sends a record to the owner of its long vertex key. */
+final case class VertexPartitioner(p: Int) extends Partitioner {
   def numPartitions: Int = p
-  def getPartition(key: Any): Int = ((key.asInstanceOf[Long] >>> shift) % p).toInt
+  def getPartition(key: Any): Int = (key.asInstanceOf[Long] % p).toInt
 }
 
 /** A bounded slice of one partition's out-edges in CSR form: row r is the
@@ -60,6 +58,16 @@ final class CsrBlock(val src: Array[Int], val deg: Array[Long], val off: Array[I
       while (e >= off(r + 1)) { r += 1; v = value(r) }
       e += 1
       (dst(e - 1), v)
+    }
+  }
+
+  /** `f(row, target)` for every edge, in block order. */
+  def foreachEdge(f: (Int, Long) => Unit): Unit = {
+    var r = 0
+    while (r < src.length) {
+      var e = off(r)
+      while (e < off(r + 1)) { f(r, dst(e)); e += 1 }
+      r += 1
     }
   }
 }
@@ -85,73 +93,120 @@ final class CsrGraph(val layout: VertexLayout, val blocks: RDD[CsrBlock]) {
 object CsrGraph {
   val BlockEdges: Int = 1 << 16
 
-  /** The graph whose out-edges are the rows (`from`, `to`) of `edges`. The
-    * rows reach their owner through one sort-based (spilling) shuffle; a
-    * source's edges are then consecutive, and only one source's targets
-    * are held at a time while its rows are cut into blocks. */
+  /** The graph whose out-edges are the rows (`from`, `to`) of `edges`. Each
+    * input partition sends every owner one array of interleaved (slot,
+    * target) pairs for the sources it holds (`VertexLoop.exchange`), and
+    * each owner counting-sorts what it received by slot into blocks of
+    * `blockEdges` edges. A sender holds its input partition's edges as
+    * primitive arrays (16 B per edge); an owner holds the arrays it received
+    * (16 B per edge) plus its blocks (8 B per edge and 16 B per row) and two
+    * long counters per slot. Nothing spills. */
   def build(edges: DataFrame, from: String, to: String, layout: VertexLayout,
             blockEdges: Int = BlockEdges): CsrGraph = {
-    val pairs = edges.select(col(from).cast("long"), col(to).cast("long"))
-      .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
     val p = layout.p
-    val blocks = pairs.repartitionAndSortWithinPartitions(layout.partitioner)
-      .mapPartitions(it => pack(it, p, blockEdges))
+    val sent = edges.select(col(from).cast("long"), col(to).cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val out = Array.fill(p)(new ArrayBuilder.ofLong)
+        rows.foreach { r =>
+          val s = r.getLong(0)
+          out(layout.part(s)).addOne(layout.slot(s)).addOne(r.getLong(1))
+        }
+        Iterator(out.map(_.result()))
+      }
+    val blocks = VertexLoop.exchange(sent, p)
+      .mapPartitionsWithIndex((k, it) => pack(it.next(), layout.slots(k), blockEdges))
       .persist(StorageLevel.MEMORY_AND_DISK)
     new CsrGraph(layout, blocks)
   }
 
-  private def pack(sorted: Iterator[(Long, Long)], p: Int, cap: Int): Iterator[CsrBlock] = {
-    val in = sorted.buffered
-    var row = new Array[Long](16) // the current source's targets
-    var rowLen = 0
-    var rowPos = 0
-    var rowSlot = 0
-    def nextRow(): Unit = {
-      val s = in.head._1
-      rowLen = 0
-      rowPos = 0
-      rowSlot = (s / p).toInt
-      while (in.hasNext && in.head._1 == s) {
-        if (rowLen == row.length) row = Arrays.copyOf(row, rowLen * 2)
-        row(rowLen) = in.next()._2
-        rowLen += 1
+  /** Counting-sorts the (slot, target) pairs of `msgs` by slot, in message
+    * order within a slot, and cuts the sorted edges into blocks of `cap`: a
+    * row cut at a block's end goes on in the next block with its full
+    * degree. */
+  private def pack(msgs: Array[Array[Long]], slots: Int, cap: Int): Iterator[CsrBlock] = {
+    val deg = new Array[Long](slots)
+    msgs.foreach { m =>
+      var i = 0
+      while (i < m.length) { deg(m(i).toInt) += 1; i += 2 }
+    }
+    val next = new Array[Long](slots) // where a slot's next edge goes
+    var total = 0L
+    var j = 0
+    while (j < slots) { next(j) = total; total += deg(j); j += 1 }
+    val dst = Array.tabulate(((total + cap - 1) / cap).toInt) { b =>
+      new Array[Long](math.min(cap, total - b.toLong * cap).toInt)
+    }
+    msgs.foreach { m =>
+      var i = 0
+      while (i < m.length) {
+        val at = next(m(i).toInt)
+        next(m(i).toInt) = at + 1
+        dst((at / cap).toInt)((at % cap).toInt) = m(i + 1)
+        i += 2
       }
     }
-    new Iterator[CsrBlock] {
-      def hasNext: Boolean = rowPos < rowLen || in.hasNext
-      def next(): CsrBlock = {
-        val src = ArrayBuilder.make[Int]
-        val deg = ArrayBuilder.make[Long]
-        val off = ArrayBuilder.make[Int]
-        val dst = ArrayBuilder.make[Long]
-        off += 0
-        var used = 0
-        while (used < cap && hasNext) {
-          if (rowPos == rowLen) nextRow()
-          val take = math.min(cap - used, rowLen - rowPos)
-          src += rowSlot
-          deg += rowLen.toLong
-          dst.addAll(row, rowPos, take)
-          rowPos += take
-          used += take
-          off += used
-        }
-        new CsrBlock(src.result(), deg.result(), off.result(), dst.result())
-      }
+    // now next(j) is the end of slot j's edges
+    val blocks = new Array[CsrBlock](dst.length)
+    var b = 0
+    var src = new ArrayBuilder.ofInt
+    var rowDeg = new ArrayBuilder.ofLong
+    var off = (new ArrayBuilder.ofInt).addOne(0)
+    def close(): Unit = {
+      blocks(b) = new CsrBlock(src.result(), rowDeg.result(), off.result(), dst(b))
+      b += 1
+      src = new ArrayBuilder.ofInt
+      rowDeg = new ArrayBuilder.ofLong
+      off = (new ArrayBuilder.ofInt).addOne(0)
     }
+    j = 0
+    while (j < slots) {
+      var at = next(j) - deg(j)
+      while (at < next(j)) {
+        if (at == (b + 1).toLong * cap) close()
+        val end = math.min(next(j), (b + 1).toLong * cap)
+        src += j
+        rowDeg += deg(j)
+        off += (end - b.toLong * cap).toInt
+        at = end
+      }
+      j += 1
+    }
+    if (b < blocks.length) close()
+    blocks.iterator
   }
 }
 
 /** The driver of dense-vector loops over a `VertexLayout`. A state holds
   * one element per partition: its share of the vectors and a metric. A
-  * round pushes along out-edges (`CsrGraph.push`), shuffles once to the
-  * targets' owners with a map-side combine, and merges with the old state
-  * through `zipPartitions`; one job materializes the new state and sums the
+  * round sends along out-edges to the targets' owners, either as
+  * map-side-combined records (`CsrGraph.push`) or as one primitive array
+  * per partition pair (`exchange`), and merges with the old state through
+  * `zipPartitions`; one job materializes the new state and sums the
   * partition metrics (a change count or a residual). */
 object VertexLoop {
 
   final case class Run[S](state: RDD[(S, Double)], rounds: Int, metric: Double,
                           converged: Boolean)
+
+  /** Ships one message per partition pair. Each partition of `out` holds
+    * one array of `p` messages, the t-th for partition t; partition t of the
+    * result holds one array of the messages sent to it, the s-th from
+    * partition s of `out`. Messages are primitive arrays, which Spark
+    * serializes with Kryo, and the receivers see them in sender order
+    * whatever order the shuffle fetches them in. */
+  def exchange[M: ClassTag](out: RDD[Array[M]], p: Int): RDD[Array[M]] = {
+    val senders = out.getNumPartitions
+    val keyed = out.mapPartitionsWithIndex { (s, it) =>
+      val msgs = it.next()
+      require(msgs.length == p, s"partition $s sent ${msgs.length} messages to $p partitions")
+      Iterator.tabulate(p)(t => (s.toLong * p + t, msgs(t)))
+    }
+    new ShuffledRDD[Long, M, M](keyed, VertexPartitioner(p)).mapPartitions { it =>
+      val in = new Array[M](senders)
+      it.foreach { case (key, m) => in((key / p).toInt) = m }
+      Iterator(in)
+    }
+  }
 
   /** The state whose partition `part` holds `f(part, slots)`. */
   def init[S: ClassTag](sc: SparkContext, layout: VertexLayout)(

@@ -137,6 +137,31 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     } finally sym.unpersist()
   }
 
+  test("CC and LP shuffle one record per partition pair") {
+    import org.apache.spark.JobCounts
+    val path = (0L until 40L).map(i => (i, i + 1))
+    val sym = (path ++ path.map(_.swap)).toDF("src", "dst").persist()
+    try {
+      sym.count()
+      val p = 4
+      // the build: one record per (input partition, owner) pair
+      val (_, build) = JobCounts(spark) {
+        val g = CsrGraph.build(sym, "dst", "src", VertexLayout(45, p))
+        try g.blocks.count() finally g.unpersist()
+      }
+      assert(build.shuffleRecords.get == sym.queryExecution.toRdd.getNumPartitions * p)
+      // a round: p^2 records per exchange, one exchange for LP, four for CC
+      val (lp, lpCounts) = JobCounts(spark)(
+        graft.algos.LabelPropagation.run(spark, sym, 45, p, maxIter = 5))
+      assert(lp.iterations == 5)
+      assert(lpCounts.shuffleRecords.get - build.shuffleRecords.get == lp.iterations * p * p)
+      val (cc, ccCounts) = JobCounts(spark)(
+        graft.algos.ConnectedComponents.run(spark, sym, 45, p))
+      assert(cc.converged && cc.iterations > 1)
+      assert(ccCounts.shuffleRecords.get - build.shuffleRecords.get == 4 * cc.iterations * p * p)
+    } finally sym.unpersist()
+  }
+
   test("Katz and PPR run one job per round") {
     val path = (0L until 40L).map(i => (i, i + 1))
     val sym = (path ++ path.map(_.swap)).toDF("src", "dst")

@@ -41,21 +41,50 @@ class VertexLoopSpec extends AnyFunSuite with SparkTest {
     assert(counts.jobs.get == 0)
   }
 
+  test("exchange: every message reaches its target once, in sender order, also from empty senders") {
+    // 7 senders, of which 1 and 4 hold no data
+    val data = spark.sparkContext.parallelize(0 until 7, 7)
+      .flatMap(s => if (s == 1 || s == 4) Nil else (0 until 10).map(x => (s, x)))
+    for (p <- Seq(1, 3, 4)) {
+      // sender s sends target t the values x with x mod p == t, tagged with s
+      def msg(s: Int, t: Int): Seq[Long] =
+        if (s == 1 || s == 4) Nil else (0 until 10).filter(_ % p == t).map(x => s * 100L + x)
+      val sent = data.mapPartitionsWithIndex { (s, it) =>
+        val xs = it.toArray
+        Iterator(Array.tabulate(p)(t => xs.filter(_._2 % p == t).map(x => s * 100L + x._2)))
+      }
+      val got = VertexLoop.exchange(sent, p)
+        .mapPartitionsWithIndex((t, it) => it.map(in => (t, in.map(_.toSeq).toSeq)))
+        .collect()
+      assert(got.map(_._1).toSeq == (0 until p), s"p=$p")
+      got.foreach { case (t, in) =>
+        assert(in == (0 until 7).map(msg(_, t)), s"p=$p target $t")
+      }
+    }
+  }
+
   test("CSR blocks are bounded: a hub spans blocks, every row keeps the full degree") {
     val layout = VertexLayout(20, 3)
     // vertex 4 is a hub with 11 out-edges (a duplicate included); 7 has 2
     val edges = (0L until 10L).map(d => (4L, d + 10)) ++ Seq((4L, 10L), (7L, 1L), (7L, 2L))
-    val g = CsrGraph.build(edges.toDF("src", "dst"), "src", "dst", layout, blockEdges = 4)
-    try {
-      val blocks = g.blocks.mapPartitionsWithIndex((k, it) => it.map(b => (k, b))).collect()
-      assert(blocks.forall(_._2.dst.length <= 4))
-      val got = blocks.flatMap { case (k, b) =>
-        b.push(r => (layout.vertex(k, b.src(r)), b.deg(r))).map { case (d, (s, deg)) => (s, d, deg) }
-      }
-      assert(got.map(e => (e._1, e._2)).sorted.toSeq == edges.sorted)
-      assert(got.forall { case (s, _, deg) => deg == edges.count(_._1 == s) })
-      // the hub's 11 edges took three blocks of its owner partition
-      assert(blocks.count { case (k, b) => k == layout.part(4) && b.src.contains(layout.slot(4)) } == 3)
-    } finally g.unpersist()
+    // the same edges in one local frame, and over 7 input partitions of
+    // which 2 and 5 are empty
+    val full = Seq(0, 1, 3, 4, 6)
+    val spread = spark.sparkContext.parallelize(0 until 7, 7)
+      .flatMap(k => edges.indices.filter(i => full(i % full.size) == k).map(edges))
+    for (input <- Seq(edges.toDF("src", "dst"), spread.toDF("src", "dst"))) {
+      val g = CsrGraph.build(input, "src", "dst", layout, blockEdges = 4)
+      try {
+        val blocks = g.blocks.mapPartitionsWithIndex((k, it) => it.map(b => (k, b))).collect()
+        assert(blocks.forall(_._2.dst.length <= 4))
+        val got = blocks.flatMap { case (k, b) =>
+          b.push(r => (layout.vertex(k, b.src(r)), b.deg(r))).map { case (d, (s, deg)) => (s, d, deg) }
+        }
+        assert(got.map(e => (e._1, e._2)).sorted.toSeq == edges.sorted)
+        assert(got.forall { case (s, _, deg) => deg == edges.count(_._1 == s) })
+        // the hub's 11 edges took three blocks of its owner partition
+        assert(blocks.count { case (k, b) => k == layout.part(4) && b.src.contains(layout.slot(4)) } == 3)
+      } finally g.unpersist()
+    }
   }
 }

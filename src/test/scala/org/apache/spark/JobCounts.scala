@@ -1,15 +1,20 @@
 package org.apache.spark
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** The jobs a body launches, and the shuffle-map stages that ran for them
-  * (a stage whose output already exists is skipped and not counted). It
-  * lives in Spark's package to read the job group and the listener bus. */
+/** The jobs a body launches, the shuffle-map stages that ran for them (a
+  * stage whose output already exists is skipped and not counted), and the
+  * shuffle records their tasks wrote. It lives in Spark's package to read
+  * the job group and the listener bus. */
 final class JobCounts(group: String) extends SparkListener {
   val jobs = new AtomicInteger
   val shuffleStages = new AtomicInteger
+  val shuffleRecords = new AtomicLong
+  private val stages = ConcurrentHashMap.newKeySet[Int]()
 
   private def mine(p: java.util.Properties): Boolean =
     p != null && p.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group
@@ -18,7 +23,14 @@ final class JobCounts(group: String) extends SparkListener {
     if (mine(j.properties)) jobs.incrementAndGet()
 
   override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-    if (mine(s.properties) && s.stageInfo.shuffleDepId.isDefined) shuffleStages.incrementAndGet()
+    if (mine(s.properties)) {
+      stages.add(s.stageInfo.stageId)
+      if (s.stageInfo.shuffleDepId.isDefined) shuffleStages.incrementAndGet()
+    }
+
+  override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+    if (stages.contains(t.stageId) && t.taskMetrics != null)
+      shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
 }
 
 object JobCounts {

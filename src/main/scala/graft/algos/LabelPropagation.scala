@@ -79,7 +79,14 @@ object LabelPropagation {
     // metric counts the changed labels.
     state.zipPartitions(votes) { (ls, vs) =>
       val l = ls.next()._1
-      val keys = vs.next().flatten
+      val msgs = vs.next()
+      val keys = new Array[Long](msgs.map(_.length).sum)
+      var at = 0
+      msgs.indices.foreach { s =>
+        System.arraycopy(msgs(s), 0, keys, at, msgs(s).length)
+        at += msgs(s).length
+        msgs(s) = null // so the received arrays are not held beside the keys
+      }
       Arrays.sort(keys)
       val count = new Array[Long](l.length)
       val best = new Array[Long](l.length)
@@ -93,8 +100,14 @@ object LabelPropagation {
         if (c > count(j) || (c == count(j) && x < best(j))) { count(j) = c; best(j) = x }
         a = b
       }
-      val out = Array.tabulate(l.length)(j => if (count(j) > 0) best(j) else l(j))
-      Iterator((out, l.indices.count(j => out(j) != l(j)).toDouble))
+      val out = l.clone()
+      var changed = 0
+      var j = 0
+      while (j < l.length) {
+        if (count(j) > 0 && best(j) != l(j)) { out(j) = best(j); changed += 1 }
+        j += 1
+      }
+      Iterator((out, changed.toDouble))
     }
   }
 }

@@ -97,10 +97,13 @@ object CsrGraph {
     * input partition sends every owner one array of interleaved (slot,
     * target) pairs for the sources it holds (`VertexLoop.exchange`), and
     * each owner counting-sorts what it received by slot into blocks of
-    * `blockEdges` edges. A sender holds its input partition's edges as
-    * primitive arrays (16 B per edge); an owner holds the arrays it received
-    * (16 B per edge) plus its blocks (8 B per edge and 16 B per row) and two
-    * long counters per slot. Nothing spills. */
+    * `blockEdges` edges. Nothing spills. A sender holds its input
+    * partition's edges in `p` growing primitive arrays: 16 B per edge, up to
+    * 32 B right after their capacities double, plus one target's share
+    * again while that array is copied to its exact size to be sent. An
+    * owner holds the arrays it received (16 B per edge) and its blocks (8 B
+    * per edge, 16 B per row) and two longs per slot, and drops each received
+    * array once its edges are in the blocks. */
   def build(edges: DataFrame, from: String, to: String, layout: VertexLayout,
             blockEdges: Int = BlockEdges): CsrGraph = {
     val p = layout.p
@@ -111,7 +114,8 @@ object CsrGraph {
           val s = r.getLong(0)
           out(layout.part(s)).addOne(layout.slot(s)).addOne(r.getLong(1))
         }
-        Iterator(out.map(_.result()))
+        // each builder is dropped once its array is taken
+        Iterator(Array.tabulate(p) { t => val a = out(t).result(); out(t) = null; a })
       }
     val blocks = VertexLoop.exchange(sent, p)
       .mapPartitionsWithIndex((k, it) => pack(it.next(), layout.slots(k), blockEdges))
@@ -136,7 +140,8 @@ object CsrGraph {
     val dst = Array.tabulate(((total + cap - 1) / cap).toInt) { b =>
       new Array[Long](math.min(cap, total - b.toLong * cap).toInt)
     }
-    msgs.foreach { m =>
+    msgs.indices.foreach { s =>
+      val m = msgs(s)
       var i = 0
       while (i < m.length) {
         val at = next(m(i).toInt)
@@ -144,6 +149,7 @@ object CsrGraph {
         dst((at / cap).toInt)((at % cap).toInt) = m(i + 1)
         i += 2
       }
+      msgs(s) = null // its edges are in the blocks now
     }
     // now next(j) is the end of slot j's edges
     val blocks = new Array[CsrBlock](dst.length)

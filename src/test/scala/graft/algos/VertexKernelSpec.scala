@@ -122,6 +122,26 @@ class VertexKernelSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("CC's min messages hold one (slot, least value) pair per vertex reached, whatever n") {
+    val layout = graft.core.VertexLayout(1L << 33, 8)
+    val puts = Seq((5L, 9L), (13L, 4L), (5L, 2L), (1L << 32, 7L), (13L, 6L), (5L, 3L), (8L, 1L))
+    val msgs = ConnectedComponents.mins(layout)(put => puts.foreach { case (v, x) => put(v, x) })
+    assert(msgs.length == 8)
+    val want = puts.groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).min }
+    for (t <- 0 until 8) {
+      val got = msgs(t).grouped(2).map { case Array(j, x) => layout.vertex(t, j.toInt) -> x }.toSeq
+      assert(got == want.filter(e => layout.part(e._1) == t).toSeq.sortBy(_._1), s"t=$t")
+    }
+    // a receiver's dense array, from sender 0's message and an empty one
+    val small = graft.core.VertexLayout(40, 8)
+    val in = Array(ConnectedComponents.mins(small)(put => puts.filter(_._1 < 40).foreach {
+      case (v, x) => put(v, x)
+    })(5), Array.empty[Long])
+    val got = ConnectedComponents.least(in, small.slots(5))
+    assert(got.toSeq == Seq(2L, 4L, Long.MaxValue, Long.MaxValue, Long.MaxValue))
+    assert(in.forall(_ == null))
+  }
+
   test("converged is false when CC or LP stops at maxIter") {
     val path = (0L until 20L).map(i => (i, i + 1))
     val sym = (path ++ path.map(_.swap)).toDF("src", "dst")

@@ -112,11 +112,11 @@ object ScalingBench {
   }
 
   /** Materialize the PACKED adjacency layout once, at full machine width.
-    * Per-session (untimed) setup then only repartitions ~10M packed rows
-    * instead of re-running the two 100M-row build shuffles at low core
-    * counts — cuts each trial's setup wall-clock several-fold so the budget
-    * goes to MEASURED runs. The timed region is identical either way (the
-    * adjacency build was never inside it). */
+    * Per-session (untimed) setup then only explodes ~10M packed rows into
+    * the CSR blocks' one exchange instead of re-running the pack's shuffles
+    * at low core counts — cuts each trial's setup wall-clock several-fold so
+    * the budget goes to MEASURED runs. The timed region holds PageRank's
+    * rounds only (`fromPacked` cuts the blocks before it). */
   def ensureAdjacency(nPages: Long): String = {
     val adjPath = s"/root/repo/target/scaling_adj_$nPages"
     if (!new java.io.File(adjPath + "/_SUCCESS").exists()) {

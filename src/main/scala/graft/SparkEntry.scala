@@ -473,8 +473,8 @@ object SparkEntry {
     }),
 
     "hits" -> ((s, d) => {
-      // 5 L2-normalized hub/authority rounds; the reversed-edge adjacency is
-      // built once so both gathers run the zero-exchange plan
+      // 5 L2-normalized hub/authority rounds on the vertex kernel; the
+      // reversed-edge adjacency holds the in-edges for the hub halves
       val e = edgesG(s, d)
       val adjOut = Adjacency.build(e, gmod(d), gparts(s, d))
       val adjIn = Adjacency.build(

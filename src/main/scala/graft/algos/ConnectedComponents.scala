@@ -67,11 +67,12 @@ object ConnectedComponents {
     val p = layout.p
     def gather(msgs: RDD[Array[Array[Long]]]) =
       msgs.mapPartitionsWithIndex((t, it) => Iterator(least(it.next(), layout.slots(t))))
-    // mngp(i) = min_{j in N(i)} gp(j)   [min_second semiring mxv]
+    // mngp(i) = min_{j in N(i)} gp(j)   [min_second semiring mxv]; read by
+    // the hooks and by f1, so kept
     val mngp = gather(VertexLoop.exchange(graph.blocks.zipPartitions(state) { (bs, ss) =>
       val gp = ss.next()._1._2
       Iterator(mins(layout)(put => bs.foreach(b => b.foreachEdge((r, i) => put(i, gp(b.src(r)))))))
-    }, p))
+    }, p)).persist(StorageLevel.MEMORY_AND_DISK)
     // hooking: f[f(i)] min= mngp(i); duplicate targets reduced by min. f
     // only falls from the identity, so f(v) <= v, and a hook no less than
     // f(i) cannot lower f(f(i)) <= f(i): it is not sent.
@@ -128,7 +129,7 @@ object ConnectedComponents {
       }
       Iterator(((f, ngp), changed.toDouble))
     }
-    (next, Seq(f1))
+    (next, Seq(mngp, f1))
   }
 
   /** Per target partition, the least value `send` put to each vertex it

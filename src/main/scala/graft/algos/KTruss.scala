@@ -55,7 +55,7 @@ object KTruss {
     // orient lo→hi by (deg, id); ids are distinct so the order is total
     val lowFirst = col("ds") < col("dd") ||
       (col("ds") === col("dd") && col("src") < col("dst"))
-    // sorted at build (the Adjacency discipline): the wedge self-join on
+    // sorted at build: the wedge self-join on
     // `lo` then runs zero-exchange AND zero-sort on both branches — the
     // flat-state rewrap re-declares the (hash, sort) layout
     Ckpt.materialize(canon

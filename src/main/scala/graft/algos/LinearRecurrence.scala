@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DoubleType
 import graft.core.{CsrGraph, VertexLayout, VertexLoop}
 import graft.graph.Adjacency
@@ -61,16 +61,15 @@ final case class LinearRecurrence(base: Double, scale: Double, perDegree: Boolea
   /** Runs the recurrence over the out-edges of `adj` from t(v) = `init(v)`,
     * or from the latest checkpoint when `checkpointer` holds one, until
     * Σ|r - t| <= tol or `maxIter` rounds have run; tol = 0 runs exactly
-    * `maxIter` rounds (the oracle-unroll discipline). The edges are cut into
-    * CSR blocks in the first round's job and freed at the end. The result
-    * is dense: (id, v) for every vertex of 0..n-1; `finalRdiff` is NaN when
-    * no round ran. */
+    * `maxIter` rounds (the oracle-unroll discipline). The rounds read the
+    * adjacency's persisted CSR blocks, which were cut at its build and
+    * outlive the run. The result is dense: (id, v) for every vertex of
+    * 0..n-1; `finalRdiff` is NaN when no round ran. */
   def run(spark: SparkSession, adj: Adjacency, tol: Double, maxIter: Int,
           checkpointer: Option[IterationCheckpointer] = None)(
       init: Long => Double): PageRankResult = {
-    val layout = VertexLayout(adj.numVertices, adj.numPartitions)
-    val graph = CsrGraph.build(
-      adj.rows.select(col("src"), explode(col("dsts")).as("dst")), "src", "dst", layout)
+    val graph = adj.graph
+    val layout = graph.layout
     val (startIter, start) = checkpointer.flatMap(_.latest(spark)) match {
       case Some((it, df)) =>
         (it, VertexLoop.load(layout, df.select(col("id").cast("long"), col("v").cast("double"))
@@ -86,7 +85,6 @@ final case class LinearRecurrence(base: Double, scale: Double, perDegree: Boolea
       checkpointer.foreach(_.save(scores(spark, layout, state), iter,
         Map("rdiff" -> rdiff.toString)))
     }
-    graph.unpersist()
     PageRankResult(scores(spark, layout, run.state), run.rounds,
       adj.numEdges * run.rounds.toLong, run.metric)
   }

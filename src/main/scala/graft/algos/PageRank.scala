@@ -22,11 +22,12 @@ final case class PageRankResult(scores: DataFrame, iterations: Int,
   * This is the `LinearRecurrence` with base = teleport and w = damping/deg,
   * on the block-cyclic vertex kernel (`graft.core.VertexLoop`): the scores
   * are one double array per partition, a round pushes `score*damping/deg`
-  * once per CSR row, sums the pushes per target in the round's only
-  * shuffle, and fills the new array with `teleport + sum`; the job that
-  * materializes it also sums |t - r|. So a round is one job. With tol = 0
-  * the loop runs exactly `maxIter` rounds. A `checkpointer` saves every
-  * round and resumes from its latest snapshot.
+  * once per row of the adjacency's CSR blocks (cut when the `Adjacency` was
+  * built, so a run shuffles no edges), sums the pushes per target in the
+  * round's only shuffle, and fills the new array with `teleport + sum`; the
+  * job that materializes it also sums |t - r|. So a round is one job.
+  * With tol = 0 the loop runs exactly `maxIter` rounds. A `checkpointer`
+  * saves every round and resumes from its latest snapshot.
   *
   * We compute in FP64 rather than the notebook's FP32 (documented
   * divergence: FP64 is strictly closer to the true recurrence, and the

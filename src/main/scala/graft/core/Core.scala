@@ -422,8 +422,8 @@ final case class GrbMatrix(df: DataFrame, shape: GrbShape) {
 
   /** mxv over a semiring: w(i) = ⊕_j A(i,j) ⊗ v(j) (`matrix.py:2203`) —
     * THE gather kernel. Vector side broadcast when small enough is left to
-    * AQE/Catalyst; algorithm drivers use the pre-bucketed adjacency layout
-    * (graft.graph.Adjacency) instead of this generic form.
+    * AQE/Catalyst; the linear recurrences and HITS push along an
+    * adjacency's CSR blocks (graft.graph.Adjacency) instead.
     * Optional `mask` (output keys) is pushed BELOW the aggregation exactly
     * like mxm's — the descriptor fusion of `GrB_mxv`
     * (`fundamentals.rst:56-63`); Catalyst will not invent this placement.

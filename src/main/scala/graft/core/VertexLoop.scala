@@ -27,6 +27,8 @@ final case class VertexLayout(n: Long, p: Int) {
   def vertex(part: Int, slot: Int): Long = slot.toLong * p + part
   def slots(part: Int): Int = if (part >= n) 0 else ((n - 1 - part) / p + 1).toInt
   def partitioner: Partitioner = VertexPartitioner(p)
+  /** Whether every vertex id fits an `Int`. */
+  def intIds: Boolean = n <= Int.MaxValue
 }
 
 object VertexLayout {
@@ -42,18 +44,25 @@ final case class VertexPartitioner(p: Int) extends Partitioner {
 
 /** A bounded slice of one partition's out-edges in CSR form: row r is the
   * source at slot `src(r)`, `deg(r)` is that source's full out-degree
-  * (duplicates included), and its targets in this block are
-  * `dst(off(r) until off(r + 1))`. A source with more out-edges than a block
-  * holds spans consecutive blocks, so no array grows with a hub's degree. */
+  * (duplicates included), and its targets in this block are `dst(e)` for e
+  * in `off(r) until off(r + 1)`. A source with more out-edges than a block
+  * holds spans consecutive blocks, so no array grows with a hub's degree.
+  * The targets are held in `ints` when every vertex id fits an `Int` and in
+  * `longs` otherwise; the other array is null. */
 final class CsrBlock(val src: Array[Int], val deg: Array[Long], val off: Array[Int],
-                     val dst: Array[Long]) extends Serializable {
+                     ints: Array[Int], longs: Array[Long]) extends Serializable {
+
+  /** Whether the targets are held as `Int`s; `edges` counts them. */
+  def narrow: Boolean = ints != null
+  def edges: Int = if (narrow) ints.length else longs.length
+  def dst(e: Int): Long = if (narrow) ints(e) else longs(e)
 
   /** (target, value(row)) for every edge; `value` runs once per row. */
   def push[V](value: Int => V): Iterator[(Long, V)] = new Iterator[(Long, V)] {
     private[this] var r = 0
     private[this] var e = 0
     private[this] var v: V = if (src.isEmpty) null.asInstanceOf[V] else value(0)
-    def hasNext: Boolean = e < dst.length
+    def hasNext: Boolean = e < edges
     def next(): (Long, V) = {
       while (e >= off(r + 1)) { r += 1; v = value(r) }
       e += 1
@@ -74,7 +83,7 @@ final class CsrBlock(val src: Array[Int], val deg: Array[Long], val off: Array[I
 
 /** A graph for vertex loops: the out-edges of each vertex, held in bounded
   * CSR blocks in its owner partition and persisted. The edges are shuffled
-  * once, in the job of the first round, and never again. */
+  * once, in the first job that reads the blocks, and never again. */
 final class CsrGraph(val layout: VertexLayout, val blocks: RDD[CsrBlock]) {
 
   /** Step 1 of a round: `emit` runs over each block beside its partition's
@@ -101,9 +110,10 @@ object CsrGraph {
     * partition's edges in `p` growing primitive arrays: 16 B per edge, up to
     * 32 B right after their capacities double, plus one target's share
     * again while that array is copied to its exact size to be sent. An
-    * owner holds the arrays it received (16 B per edge) and its blocks (8 B
-    * per edge, 16 B per row) and two longs per slot, and drops each received
-    * array once its edges are in the blocks. */
+    * owner holds the arrays it received (16 B per edge) and its blocks and
+    * two longs per slot, and drops each received array once its edges are
+    * in the blocks. A block takes 4 B per edge when `layout.intIds` and 8 B
+    * otherwise, and 16 B per row. */
   def build(edges: DataFrame, from: String, to: String, layout: VertexLayout,
             blockEdges: Int = BlockEdges): CsrGraph = {
     val p = layout.p
@@ -118,7 +128,9 @@ object CsrGraph {
         Iterator(Array.tabulate(p) { t => val a = out(t).result(); out(t) = null; a })
       }
     val blocks = VertexLoop.exchange(sent, p)
-      .mapPartitionsWithIndex((k, it) => pack(it.next(), layout.slots(k), blockEdges))
+      .mapPartitionsWithIndex { (k, it) =>
+        pack(it.next(), layout.slots(k), blockEdges, layout.intIds)
+      }
       .persist(StorageLevel.MEMORY_AND_DISK)
     new CsrGraph(layout, blocks)
   }
@@ -126,8 +138,9 @@ object CsrGraph {
   /** Counting-sorts the (slot, target) pairs of `msgs` by slot, in message
     * order within a slot, and cuts the sorted edges into blocks of `cap`: a
     * row cut at a block's end goes on in the next block with its full
-    * degree. */
-  private def pack(msgs: Array[Array[Long]], slots: Int, cap: Int): Iterator[CsrBlock] = {
+    * degree. The blocks hold `Int` targets when `narrow`. */
+  private[graft] def pack(msgs: Array[Array[Long]], slots: Int, cap: Int,
+                          narrow: Boolean): Iterator[CsrBlock] = {
     val deg = new Array[Long](slots)
     msgs.foreach { m =>
       var i = 0
@@ -137,28 +150,31 @@ object CsrGraph {
     var total = 0L
     var j = 0
     while (j < slots) { next(j) = total; total += deg(j); j += 1 }
-    val dst = Array.tabulate(((total + cap - 1) / cap).toInt) { b =>
-      new Array[Long](math.min(cap, total - b.toLong * cap).toInt)
-    }
+    val nBlocks = ((total + cap - 1) / cap).toInt
+    def size(b: Int) = math.min(cap, total - b.toLong * cap).toInt
+    val ints = Array.tabulate(nBlocks)(b => if (narrow) new Array[Int](size(b)) else null)
+    val longs = Array.tabulate(nBlocks)(b => if (narrow) null else new Array[Long](size(b)))
     msgs.indices.foreach { s =>
       val m = msgs(s)
       var i = 0
       while (i < m.length) {
         val at = next(m(i).toInt)
         next(m(i).toInt) = at + 1
-        dst((at / cap).toInt)((at % cap).toInt) = m(i + 1)
+        val b = (at / cap).toInt
+        val e = (at % cap).toInt
+        if (narrow) ints(b)(e) = m(i + 1).toInt else longs(b)(e) = m(i + 1)
         i += 2
       }
       msgs(s) = null // its edges are in the blocks now
     }
     // now next(j) is the end of slot j's edges
-    val blocks = new Array[CsrBlock](dst.length)
+    val blocks = new Array[CsrBlock](nBlocks)
     var b = 0
     var src = new ArrayBuilder.ofInt
     var rowDeg = new ArrayBuilder.ofLong
     var off = (new ArrayBuilder.ofInt).addOne(0)
     def close(): Unit = {
-      blocks(b) = new CsrBlock(src.result(), rowDeg.result(), off.result(), dst(b))
+      blocks(b) = new CsrBlock(src.result(), rowDeg.result(), off.result(), ints(b), longs(b))
       b += 1
       src = new ArrayBuilder.ofInt
       rowDeg = new ArrayBuilder.ofLong

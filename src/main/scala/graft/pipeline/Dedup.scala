@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.algos.ConnectedComponents
+import graft.core.{Ckpt, CkptState}
 
 /** Deduplication operators for training-data pipelines: exact hash dedup,
   * word-n-gram Jaccard near-dup, MinHash+LSH banding, SimHash.
@@ -69,7 +70,12 @@ object Dedup {
     * the Jaccard stays an exact set similarity on that universe.
     */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.5,
-                        w: Int = 3, maxDf: Int = 50): DataFrame = {
+                        w: Int = 3, maxDf: Int = 50): DataFrame =
+    jaccardPairs(docs, threshold, w, maxDf)._1.df
+
+  /** `ngramJaccardPairs` materialized, with its row count from that job. */
+  private def jaccardPairs(docs: DataFrame, threshold: Double, w: Int,
+                           maxDf: Int): (CkptState, Long) = {
     // shingle ids are 62-bit longs built from PER-TOKEN hashes (one 24-term
     // polynomial pass per token, then a 3-term combine per shingle — see
     // shingleIdRows): the distinct, the df-cap, and the self-join below
@@ -99,7 +105,7 @@ object Dedup {
     // round 2): the returned relation is a lineage-truncated materialized
     // plan whose storage Spark's ContextCleaner reclaims once the DataFrame
     // is unreachable; no cacheManager entry survives this call
-    val out = graft.core.Ckpt.materialize(result).df
+    val out = Ckpt.materializeWithCount(result)
     sh.unpersist(blocking = false)
     all.unpersist(blocking = false)
     out
@@ -125,8 +131,7 @@ object Dedup {
     }
     val nDocs = mx.getLong(0) + 1
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val pairs = ngramJaccardPairs(docs, threshold, w, maxDf)
-      .select(col("doc_a"), col("doc_b"))
+    val (pairs, nPairs) = jaccardPairs(docs, threshold, w, maxDf)
     // the verified near-dup pair graph is orders of magnitude smaller than
     // the corpus; when it fits the driver comfortably, resolve clusters
     // with an exact min-member union-find and broadcast the label map back
@@ -134,16 +139,15 @@ object Dedup {
     // FastSV fixpoint, minus ~7 fixed-cost distributed iterations). Above
     // the gate (early-web-crawl duplication rates at 100 TB) the
     // distributed CC path runs unchanged.
-    val nPairs = pairs.count() // pairs is a materialized flat relation
     val labels: DataFrame =
       if (nPairs <= 1000000L) {
-        val arr = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+        val arr = pairs.df.collect().map(r => (r.getLong(0), r.getLong(1)))
         val m = graft.algos.Boruvka.unionFindMinLabels(arr)
         broadcast(spark.createDataFrame(m.toSeq.sortBy(_._1))
           .toDF("id", "component"))
       } else {
-        val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-          .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        val sym = pairs.df.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .unionByName(pairs.df.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         // CC seeds the dense range 0..max(doc_id): under a SPARSE id space
         // (a filtered corpus) the range rows with no matching document must
         // not surface as phantom singleton clusters — the left join below
@@ -153,6 +157,7 @@ object Dedup {
         ConnectedComponents.run(spark, sym, nDocs, parts).components
           .select(col("id"), col("component"))
       }
+    pairs.release() // the labels no longer read it
     docs.select(col("doc_id"))
       .join(labels, col("doc_id") === labels("id"), "left")
       .select(col("doc_id"),

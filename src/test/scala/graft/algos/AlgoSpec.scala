@@ -53,7 +53,7 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
     val edges = (for (_ <- 0 until 400) yield
       (rnd.nextInt(n - 10).toLong, rnd.nextInt(n).toLong))
       .distinct.filter { case (s, d) => s != d }
-    val adj = Adjacency.build(edges.toDF("src", "dst"), n, 4, maxChunk = 8)
+    val adj = Adjacency.build(edges.toDF("src", "dst"), n, 4)
     try {
       // an even and an odd round count
       Seq(4, 5).foreach { k =>
@@ -78,7 +78,7 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
       val d = (rnd.nextInt(n * n) % n).toLong * rnd.nextInt(n) % n
       (s, d)
     }).distinct.filter { case (s, d) => s != d }
-    val adj = Adjacency.build(edges.toDF("src", "dst"), n, 4, maxChunk = 8)
+    val adj = Adjacency.build(edges.toDF("src", "dst"), n, 4)
     val res = PageRank.run(spark, adj, damping = 0.85, tol = 1e-6, maxIter = 200)
     val (want, _) = pagerank3fLocal(n, edges, 0.85, 1e-6, 200)
     val got = res.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -526,6 +526,18 @@ class AlgoSpec extends AnyFunSuite with SparkTest {
     assert(math.abs(hubs.values.map(x => x * x).sum - 1.0) < 1e-12)
     assert(math.abs(auths.values.map(x => x * x).sum - 1.0) < 1e-12)
     assert(hubs.maxBy(_._2)._1 == 0L && auths.maxBy(_._2)._1 == 2L)
+  }
+
+  test("HITS scores keep their ids through a coalesce") {
+    val e = Seq((0L, 1L), (0L, 2L), (1L, 2L), (3L, 2L), (5L, 4L)).toDF("src", "dst")
+    val adjOut = Adjacency.build(e, 6, 3)
+    val adjIn = Adjacency.build(e.select(col("dst").as("src"), col("src").as("dst")), 6, 3)
+    try {
+      val scores = HITS.run(spark, adjOut, adjIn, maxIter = 2).scores
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(rows(scores.coalesce(1)) == rows(scores))
+      assert(scores.collect().map(_.getLong(0)).toSet == Set(0L, 1L, 2L, 3L, 4L, 5L))
+    } finally { adjOut.unpersist(); adjIn.unpersist() }
   }
 
   test("GraphStats: lcc / assortativity / reciprocity / degree histogram on a hand fixture") {

@@ -88,9 +88,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     try {
       // lineage of one round, from the new state back to the old state and
       // the persisted blocks
-      val layout = VertexLayout(57, 4)
-      val graph = CsrGraph.build(adj.rows.select(col("src"), explode(col("dsts")).as("dst")),
-        "src", "dst", layout)
+      val graph = adj.graph
+      val layout = graph.layout
       val state = VertexLoop.init(spark.sparkContext, layout)((_, k) => Array.fill(k)(1.0 / 57))
       val next = graft.algos.LinearRecurrence(0.15 / 57, 0.85, perDegree = true).round(graph, state)
       val shuffles = scala.collection.mutable.Buffer[ShuffleDependency[_, _, _]]()
@@ -109,15 +108,32 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       assert(shuffles.size == 1, s"one shuffle per round, got ${shuffles.size}")
       // (Long, Double) records: Spark picks Kryo by itself
       assert(shuffles.head.serializer.isInstanceOf[KryoSerializer])
-      graph.unpersist()
 
-      // a whole run: one job per round, and one shuffle-map stage per round
-      // plus the blocks' build — never a reshuffle of the blocks
+      // a whole run: one job and one shuffle-map stage per round — the
+      // blocks were built with the adjacency and are never reshuffled
       val (res, counts) =
         org.apache.spark.JobCounts(spark)(graft.algos.PageRank.run(spark, adj, tol = 0.0, maxIter = 3))
       assert(res.iterations == 3)
       assert(counts.jobs.get == 3)
-      assert(counts.shuffleStages.get == 3 + 1)
+      assert(counts.shuffleStages.get == 3)
+    } finally adj.unpersist()
+  }
+
+  test("two PageRank runs on one Adjacency build its blocks once") {
+    import org.apache.spark.JobCounts
+    val e = (0 until 400).map(i => ((i % 57).toLong, ((i * 13 + 5) % 57).toLong))
+      .filter { case (s, d) => s != d }.distinct.toDF("src", "dst")
+    // the build is one job over one edge-scale shuffle
+    val (adj, build) = JobCounts(spark)(graft.graph.Adjacency.build(e, 57, 4))
+    try {
+      assert(build.jobs.get == 1 && build.shuffleStages.get == 1)
+      for (run <- 1 to 2) {
+        val (res, counts) =
+          JobCounts(spark)(graft.algos.PageRank.run(spark, adj, tol = 0.0, maxIter = 3))
+        assert(res.iterations == 3)
+        assert(counts.jobs.get == 3, s"run $run")
+        assert(counts.shuffleStages.get == 3, s"run $run")
+      }
     } finally adj.unpersist()
   }
 
@@ -162,6 +178,18 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     } finally sym.unpersist()
   }
 
+  test("CC reads each shuffle record once: as many read as written") {
+    val path = (0L until 40L).map(i => (i, i + 1))
+    val sym = (path ++ path.map(_.swap)).toDF("src", "dst").persist()
+    try {
+      sym.count()
+      val (cc, counts) = org.apache.spark.JobCounts(spark)(
+        graft.algos.ConnectedComponents.run(spark, sym, 45, 4))
+      assert(cc.converged && cc.iterations > 1)
+      assert(counts.shuffleReadRecords.get == counts.shuffleRecords.get)
+    } finally sym.unpersist()
+  }
+
   test("Katz and PPR run one job per round") {
     val path = (0L until 40L).map(i => (i, i + 1))
     val sym = (path ++ path.map(_.swap)).toDF("src", "dst")
@@ -190,9 +218,8 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     try {
       // one Eigenvector round (self = 1, w = 1) reaches the old state and the
       // persisted blocks through exactly one shuffle: the dst aggregation
-      val layout = VertexLayout(57, 4)
-      val graph = CsrGraph.build(adj.rows.select(col("src"), explode(col("dsts")).as("dst")),
-        "src", "dst", layout)
+      val graph = adj.graph
+      val layout = graph.layout
       val state = VertexLoop.init(spark.sparkContext, layout)((_, k) => Array.fill(k)(1.0 / 57))
       val next = graft.algos.LinearRecurrence(0.0, 1.0, self = 1.0).round(graph, state)
       val shuffles = scala.collection.mutable.Buffer[ShuffleDependency[_, _, _]]()
@@ -209,15 +236,14 @@ class PlanSpec extends AnyFunSuite with SparkTest {
       walk(next)
       assert(reached == Set(state.id, graph.blocks.id))
       assert(shuffles.size == 1, s"expected exactly the dst-agg shuffle, got ${shuffles.size}")
-      graph.unpersist()
 
-      // a whole run: one job and one shuffle-map stage per round, plus the
-      // blocks' build — the adjacency is never reshuffled or re-sorted
+      // a whole run: one job and one shuffle-map stage per round — the
+      // adjacency is never reshuffled or re-sorted
       val (eig, counts) = org.apache.spark.JobCounts(spark)(
         graft.algos.Eigenvector.run(spark, adj, maxIter = 3))
       assert(eig.iterations == 3)
       assert(counts.jobs.get == eig.iterations)
-      assert(counts.shuffleStages.get == eig.iterations + 1)
+      assert(counts.shuffleStages.get == eig.iterations)
     } finally adj.unpersist()
   }
 

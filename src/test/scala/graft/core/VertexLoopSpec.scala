@@ -76,7 +76,7 @@ class VertexLoopSpec extends AnyFunSuite with SparkTest {
       val g = CsrGraph.build(input, "src", "dst", layout, blockEdges = 4)
       try {
         val blocks = g.blocks.mapPartitionsWithIndex((k, it) => it.map(b => (k, b))).collect()
-        assert(blocks.forall(_._2.dst.length <= 4))
+        assert(blocks.forall(_._2.edges <= 4))
         val got = blocks.flatMap { case (k, b) =>
           b.push(r => (layout.vertex(k, b.src(r)), b.deg(r))).map { case (d, (s, deg)) => (s, d, deg) }
         }

@@ -3,25 +3,25 @@ package graft.graph
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+import org.apache.spark.sql.types.LongType
 import graft.SparkTestSession
+import graft.core.CsrGraph
 
-/** ScalaCheck guards for the CSR-style packed adjacency — the layout every
+/** ScalaCheck guards for the adjacency's two layouts — the CSR blocks every
   * iterative kernel reads each round, so a packing bug corrupts every
-  * algorithm at once. Random deduplicated edge lists with a forced hub
-  * (so the chunk-salting path is always exercised) against driver-side
-  * layout invariants:
+  * algorithm at once, and the packed parquet rows a bench caches. Random
+  * deduplicated edge lists with a forced hub (so the chunk-salting path is
+  * always exercised) against driver-side invariants:
   *   1. exploding the packed rows recovers EXACTLY the input edge set;
-  *   2. `deg` is the FULL out-degree on every chunk row (PageRank divides
-  *      by it without a join — a chunk-length value here silently inflates
-  *      hub contributions);
+  *   2. `deg` is the FULL out-degree on every chunk row and on every block
+  *      row (PageRank divides by it without a join — a chunk-length value
+  *      here silently inflates hub contributions);
   *   3. per-src chunk count ≤ ceil(deg/maxChunk) and the chunk partition of
   *      each hub's neighbors is the documented `dst % nChunks` arithmetic;
-  *   4. neighbor arrays are sorted ascending (the build-once sort the
-  *      iteration joins reuse);
-  *   5. int-packing triggers exactly on numVertices ≤ Int.MaxValue and
-  *      NEVER changes the recovered edge content;
-  *   6. the layout is partitioning-independent (2 vs 5 partitions). */
+  *   4. packed neighbor arrays are sorted ascending;
+  *   5. the blocks hold `Int` targets exactly when the ids fit, and `Long`
+  *      targets NEVER change the recovered edge content;
+  *   6. the blocks are partitioning-independent (2 vs 5 partitions). */
 object AdjacencyPropertySpec extends Properties("AdjacencyProps") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -39,49 +39,53 @@ object AdjacencyPropertySpec extends Properties("AdjacencyProps") {
 
   val genMaxChunk: Gen[Int] = Gen.oneOf(1, 2, 3, 5, 8, 4096)
 
-  private def checkLayout(es: Set[(Long, Long)], maxChunk: Int,
-                          numVertices: Long): Boolean = {
-    import spark.implicits._
-    val adj = Adjacency.build(es.toSeq.toDF("src", "dst"), numVertices,
-      numPartitions = 3, maxChunk = maxChunk)
-    try {
-      val outDeg = es.groupBy(_._1).map { case (s, g) => (s, g.size.toLong) }
-      val rows = adj.rows.collect()
-      val intPacked = adj.rows.schema("dsts").dataType
-        .asInstanceOf[ArrayType].elementType == IntegerType
-      val dstsOf: org.apache.spark.sql.Row => Seq[Long] =
-        if (intPacked) r => r.getSeq[Int](2).map(_.toLong)
-        else r => r.getSeq[Long](2)
+  private def outDeg(es: Set[(Long, Long)]): Map[Long, Long] =
+    es.groupBy(_._1).map { case (s, g) => (s, g.size.toLong) }
+
+  property("pack: explode == input edges, full deg per chunk, dst%nChunks salting, sorted arrays") =
+    forAll(genEdges, genMaxChunk) { (es, maxChunk) =>
+      import spark.implicits._
+      val packed = Adjacency.pack(es.toSeq.toDF("src", "dst"), maxChunk)
+      val rows = packed.collect()
+      val deg = outDeg(es)
+      val dstsOf = (r: org.apache.spark.sql.Row) => r.getSeq[Long](2)
       val recovered = rows.flatMap(r => dstsOf(r).map(d => (r.getLong(0), d)))
-      val perSrcRows = rows.groupBy(_.getLong(0))
-      (intPacked == (numVertices <= Int.MaxValue)) &&
-        adj.rows.schema("src").dataType == LongType &&
-        adj.numEdges == es.size &&
+      packed.schema("src").dataType == LongType &&
         recovered.toSet == es && recovered.length == es.size &&
         rows.forall { r => // full degree + sortedness on every chunk row
           val ds = dstsOf(r)
-          r.getLong(1) == outDeg(r.getLong(0)) && ds == ds.sorted
+          r.getLong(1) == deg(r.getLong(0)) && ds == ds.sorted
         } &&
-        perSrcRows.forall { case (s, g) =>
-          val deg = outDeg(s)
-          val nChunks = (deg + maxChunk - 1) / maxChunk
+        rows.groupBy(_.getLong(0)).forall { case (s, g) =>
+          val nChunks = (deg(s) + maxChunk - 1) / maxChunk
           // rows are exactly the non-empty residue classes of dst % nChunks
           val want = es.filter(_._1 == s).map(_._2).groupBy(d =>
             java.lang.Math.floorMod(d, nChunks))
           g.length == want.size &&
             g.map(r => dstsOf(r).toSet).toSet == want.values.map(_.toSet).toSet
         }
-    } finally adj.unpersist()
-  }
-
-  property("build: explode == input edges, full deg per chunk, dst%nChunks salting, sorted arrays, int-packed") =
-    forAll(genEdges, genMaxChunk) { (es, mc) =>
-      checkLayout(es, mc, numVertices = 20L)
     }
 
   property("long-path (numVertices > Int.MaxValue) keeps array<long> and identical content") =
-    forAll(genEdges, genMaxChunk) { (es, mc) =>
-      checkLayout(es, mc, numVertices = Int.MaxValue.toLong + 1)
+    forAll(genEdges, Gen.oneOf(1, 2, 3, 5, 8)) { (es, cap) =>
+      // one partition's (slot, target) message packed with Int targets, and
+      // with Long ones shifted past Int.MaxValue: the same rows, degrees and
+      // targets, checked without a >2^31 layout's slot arrays
+      val far = Int.MaxValue.toLong + 1
+      def blocks(shift: Long, narrow: Boolean) = CsrGraph.pack(
+        Array(es.toArray.flatMap { case (s, d) => Array(s, d + shift) }), 20, cap, narrow).toSeq
+      def content(bs: Seq[graft.core.CsrBlock], shift: Long) = bs.flatMap { b =>
+        val out = Seq.newBuilder[(Long, Long, Long)]
+        b.foreachEdge((r, d) => out += ((b.src(r).toLong, b.deg(r), d - shift)))
+        out.result()
+      }
+      val wide = blocks(far, narrow = false)
+      val narrow = blocks(0L, narrow = true)
+      val deg = outDeg(es)
+      wide.forall(b => !b.narrow && b.edges <= cap) && narrow.forall(_.narrow) &&
+        content(wide, far) == content(narrow, 0L) &&
+        content(narrow, 0L).map(e => (e._1, e._3)).sorted == es.toSeq.sorted &&
+        content(narrow, 0L).forall(e => e._2 == deg(e._1))
     }
 
   property("layout is partitioning-independent: 2 vs 5 partitions recover the same rows") =
@@ -91,10 +95,13 @@ object AdjacencyPropertySpec extends Properties("AdjacencyProps") {
       val a2 = Adjacency.fromPacked(packed, 20L, numPartitions = 2)
       val a5 = Adjacency.fromPacked(packed, 20L, numPartitions = 5)
       try {
-        def flat(a: Adjacency) = a.rows
-          .select(col("src"), col("deg"), explode(col("dsts")).as("d"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-        a2.numEdges == a5.numEdges && flat(a2) == flat(a5)
+        val deg = outDeg(es)
+        val flat = AdjacencySpec.edges(a2).sorted
+        a2.numEdges == es.size && a5.numEdges == es.size &&
+          flat == AdjacencySpec.edges(a5).sorted &&
+          flat.map(e => (e._1, e._3)) == es.toSeq.sorted &&
+          flat.forall(e => e._2 == deg(e._1)) &&
+          Seq(a2, a5).forall(_.graph.blocks.collect().forall(_.narrow))
       } finally { a2.unpersist(); a5.unpersist() }
     }
 }

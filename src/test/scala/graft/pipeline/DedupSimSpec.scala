@@ -117,6 +117,16 @@ class DedupSimSpec extends AnyFunSuite with SparkTest {
     assert(rows === Set((5L, 5L, 1L), (90000L, 5L, 0L)))
   }
 
+  test("dedupClusters counts its pairs in the job that materializes them") {
+    import org.apache.spark.JobCounts
+    val docs = spark.read.parquet(docsPath)
+    val (_, pairs) = JobCounts(spark)(Dedup.ngramJaccardPairs(docs, threshold = 0.3))
+    val (_, clusters) = JobCounts(spark)(Dedup.dedupClusters(spark, docs, threshold = 0.3))
+    // besides the pair plan's stages, only the max(doc_id) aggregate
+    // shuffles: no count job runs over the materialized pairs
+    assert(clusters.shuffleStages.get == pairs.shuffleStages.get + 1)
+  }
+
   test("shingle df-cap defuses a hot-shingle candidate bomb") {
     val hot = "the quick brown fox jumps over"
     val docs = (0 until 60)

@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
 
 /** The jobs a body launches, the shuffle-map stages that ran for them (a
   * stage whose output already exists is skipped and not counted), and the
-  * shuffle records their tasks wrote. It lives in Spark's package to read
+  * shuffle records their tasks wrote and read. It lives in Spark's package to read
   * the job group and the listener bus. */
 final class JobCounts(group: String) extends SparkListener {
   val jobs = new AtomicInteger
   val shuffleStages = new AtomicInteger
   val shuffleRecords = new AtomicLong
+  val shuffleReadRecords = new AtomicLong
   private val stages = ConcurrentHashMap.newKeySet[Int]()
 
   private def mine(p: java.util.Properties): Boolean =
@@ -29,8 +30,10 @@ final class JobCounts(group: String) extends SparkListener {
     }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-    if (stages.contains(t.stageId) && t.taskMetrics != null)
+    if (stages.contains(t.stageId) && t.taskMetrics != null) {
       shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      shuffleReadRecords.addAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead)
+    }
 }
 
 object JobCounts {

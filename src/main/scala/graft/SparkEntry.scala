@@ -52,7 +52,10 @@ object SparkEntry {
     * (~60× the edge input on this fixture), so partitioning must follow the
     * expansion, not the input — an input-derived count starves the wedge
     * join of parallelism (measured: triangle_centrality 4.30 s → 5.51 s
-    * min-of-3 when moved to the input-derived count). */
+    * min-of-3 when moved to the input-derived count). All but ktruss's peel
+    * and square_clustering now run on the triangle kernel, which makes no
+    * wedge records; whether they gain from the input-derived count is not
+    * measured. */
   private[graft] def gparts(s: SparkSession, dir: String): Int = {
     val conf = parts(s)
     val edgeBytes = sfOf(dir) * 6.0e6 * 16.0

@@ -12,8 +12,9 @@ import graft.core.Ckpt
   * degree histogram.
   *
   * Scale notes: every operator here is one or two hash aggregations over the
-  * edge list plus (for lcc) the degree-ORIENTED triangle enumeration whose
-  * wedge fan-out is bounded by O(√E) per vertex — no all-pairs joins, no
+  * edge list plus (for lcc, transitivity and generalized degree) the
+  * degree-ORIENTED triangle enumeration of `graft.core.Triangles`, whose
+  * rows are bounded by O(√E) per vertex — no all-pairs joins, no
   * driver-side iteration, nothing keyed on an unbounded value domain.
   */
 object GraphStats {
@@ -21,20 +22,19 @@ object GraphStats {
   /** Per-vertex local clustering coefficient over a symmetric, deduplicated,
     * loop-free edge set: lcc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)), 0 where
     * deg < 2. Triangles are enumerated once at their (deg,id)-min corner
-    * (KTruss.orientedTriangles) and scattered to all three corners — the
-    * per-corner count is exact, not the oriented one.
+    * on the triangle kernel (KTruss.orientedTriangles) and scattered to all
+    * three corners — the per-corner count is exact, not the oriented one.
     * Output (id, deg, lcc), lcc rounded to 6 decimals. */
   def localClustering(edgesSym: DataFrame, numPartitions: Int): DataFrame = {
-    // the symmetric input feeds three plan branches (degrees + the two
-    // branches inside orientedTriangles) — scan it once
+    // the symmetric input feeds the degrees and the kernel's two reads (its
+    // vertex count, whose job materializes the cache, and its build)
     val e = edgesSym.select(col("src"), col("dst")).persist()
-    e.count()
     try {
+      val (tri, o) = KTruss.orientedTriangles(e, numPartitions)
       val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .select(col("src").as("id"), col("deg"))
-      val (tri, o) = KTruss.orientedTriangles(e, numPartitions)
-      // one Generate over the materialized triangle rows beats three
-      // unionAll branches that would each re-run the close join
+      // one Generate over the triangle rows beats three unionAll branches
+      // that would each re-run the intersections
       val corners = tri
         .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
         .groupBy("id").agg(count(lit(1)).as("tri"))
@@ -44,7 +44,7 @@ object GraphStats {
             when(col("deg") < 2, lit(0.0)).otherwise(
               round(coalesce(col("tri"), lit(0L)) * 2.0
                 / (col("deg") * (col("deg") - 1)), 6)).as("lcc")))
-      o.release()
+      o.unpersist()
       out.df // |V| rows — blocks back the returned frame, released with the session
     } finally e.unpersist(false)
   }
@@ -155,27 +155,27 @@ object GraphStats {
   /** Global transitivity: 3·|triangles| / |wedges| with wedges counted as
     * Σ_v C(deg(v), 2) — the whole-graph ratio beside [[localClustering]]'s
     * per-vertex coefficient (graphblas-algorithms `cluster.py`
-    * transitivity; reference kernels: the same masked `plus_pair` square).
-    * Both counts are EXACT int64 aggregates combined in one closed-form
-    * double, so the result is bit-stable across partitionings. Wedge-free
+    * transitivity; reference kernels: the same masked `plus_pair` square,
+    * here the triangle kernel through KTruss.orientedTriangles). Both
+    * counts are EXACT int64 aggregates combined in one closed-form double,
+    * so the result is bit-stable across partitionings. Wedge-free
     * graphs (max degree < 2) yield 0. Output a single (transitivity) row,
     * 9 decimals. */
   def transitivity(edgesSym: DataFrame, numPartitions: Int): DataFrame = {
     val e = edgesSym.select(col("src"), col("dst")).persist()
-    e.count()
     try {
+      val (tri, o) = KTruss.orientedTriangles(e, numPartitions)
       // 2·wedges as an EXACT int64 (deg·(deg−1) is even; halving folds into
       // the final ratio so no long→double division happens mid-aggregate)
       val wedges2 = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .agg(sum(col("deg") * (col("deg") - 1)).as("w2"))
-      val (tri, o) = KTruss.orientedTriangles(e, numPartitions)
       val nt = tri.agg(count(lit(1)).as("t"))
-      // materialize the 1-row result before releasing the oriented state it
-      // scans (same discipline as localClustering's output)
+      // materialize the 1-row result before freeing the kernel it scans
+      // (same discipline as localClustering's output)
       val out = Ckpt.materialize(nt.crossJoin(wedges2).select(
         when(col("w2") === 0, lit(0.0)).otherwise(
           round(col("t") * 6.0 / col("w2"), 9)).as("transitivity")))
-      o.release()
+      o.unpersist()
       out.df
     } finally e.unpersist(false)
   }
@@ -262,13 +262,13 @@ object GraphStats {
     * many triangles each incident edge sits on — (id, t, n_edges) rows
     * meaning "v has n_edges edges that each close exactly t triangles".
     * Σ_t n_edges = deg(v) and Σ_t t·n_edges = 2·tri(v). Per-edge triangle
-    * support comes from the shared oriented enumeration
-    * (KTruss.supportCanon — O(√E) wedge fan-out), scattered to both
+    * support comes from the shared oriented enumeration on the triangle
+    * kernel (KTruss.supportCanon — O(√E) oriented rows), scattered to both
     * endpoints; support-0 edges join back via the full edge list. */
   def generalizedDegree(edgesSym: DataFrame, numPartitions: Int): DataFrame = {
     val e = edgesSym.select(col("src"), col("dst")).persist()
-    e.count()
     try {
+      // the kernel's vertex count materializes the cached input
       val supC = KTruss.supportCanon(e, numPartitions)
       // Scatter the canonical support rows to BOTH endpoints directly and
       // derive the t = 0 bucket by difference against the degree — the

@@ -1,8 +1,10 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuilder
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Ckpt, CkptState}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.{Ckpt, CkptState, Triangles}
 
 final case class KTrussResult(truss: DataFrame, rounds: Int)
 
@@ -26,7 +28,14 @@ final case class KTrussResult(truss: DataFrame, rounds: Int)
   * graph, so hub vertices never fan out quadratically. Same trick family
   * as Dedup's df-cap, but lossless.
   *
-  * Per round (3 jobs): degrees + orientation from the persisted edge
+  * The one-shot enumeration (`orientedTriangles`, and `supportCanon` over
+  * it) runs on the triangle kernel of the vertex loops
+  * (`graft.core.Triangles`): the same (deg, id) orientation, as
+  * sorted-merge intersections with no wedge records. The peel loop below
+  * still runs on Catalyst wedge joins, which the kernel does not replace
+  * yet: it would peel on a per-edge support array instead.
+  *
+  * Per peel round (3 jobs): degrees + orientation from the persisted edge
   * state; oriented wedge self-join (zero-exchange: o is hash-partitioned
   * on its pivot `lo`); close against the canonical edge set; scatter union
   * → one count aggregation; filter `>= k-2`; symmetrize back (support is
@@ -75,8 +84,7 @@ object KTruss {
     * kept one-sided by the filter). The closing edge set is derived from
     * the frame ITSELF (least/greatest of (lo, hi) is exactly its canonical
     * form), so the b<c filter and the canonical-closure invariant live in
-    * ONE place for both the fresh enumeration and the stale-orientation
-    * peel loop (ADVICE r4: the two inline copies were a drift risk). */
+    * ONE place for the stale-orientation peel loop's rounds. */
   private def trianglesOf(od: DataFrame): DataFrame = {
     val w = od.select(col("lo"), col("hi").as("b"))
       .join(od.select(col("lo"), col("hi").as("c")), Seq("lo"))
@@ -102,15 +110,27 @@ object KTruss {
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
       .select(col("u").as("src"), col("v").as("dst"), col("sup"))
 
-  /** Degree-oriented triangle enumeration: each triangle {a,b,c} of the
-    * symmetric edge set exactly ONCE as (a, b, c) with a the (deg,id)-min
-    * corner and b < c. Returns (tri, orientationState) — the caller must
-    * release the state after consuming tri. Shared by the per-edge support
-    * (below) and `TriangleCount.count`. */
+  /** Degree-oriented triangle enumeration on the triangle kernel
+    * (`graft.core.Triangles`): each triangle {a,b,c} of the symmetric edge
+    * set exactly ONCE as (a, b, c) with a the (deg,id)-min corner and b < c.
+    * The vertex count comes from one job over `edgesSym`, so a persisted
+    * input is materialized by it. Returns (tri, kernel) — the caller must
+    * unpersist the kernel after consuming tri. Shared by the per-edge
+    * support (below), the clustering statistics and triangle centrality. */
   private[algos] def orientedTriangles(edgesSym: DataFrame,
-                                       numPartitions: Int): (DataFrame, CkptState) = {
-    val o = orientFrame(edgesSym, numPartitions)
-    (trianglesOf(o.df), o)
+                                       numPartitions: Int): (DataFrame, Triangles) = {
+    val t = Triangles(edgesSym, numPartitions)
+    val rows = t.perPartition { _ =>
+      new Triangles.Sink[Array[Long]] {
+        private[this] val abc = new ArrayBuilder.ofLong
+        def apply(a: Long, b: Long, c: Long): Unit =
+          abc += a += math.min(b, c) += math.max(b, c)
+        def result(): Array[Long] = abc.result()
+      }
+    }.flatMap(m => Iterator.range(0, m.length, 3).map(i => Row(m(i), m(i + 1), m(i + 2))))
+    val tri = edgesSym.sparkSession.createDataFrame(rows,
+      StructType(Seq("a", "b", "c").map(StructField(_, LongType, nullable = false))))
+    (tri, t)
   }
 
   /** exact per-edge triangle support of a symmetric edge set, oriented
@@ -119,7 +139,7 @@ object KTruss {
   private[graft] def supportCanon(edgesSym: DataFrame, numPartitions: Int): CkptState = {
     val (tri, o) = orientedTriangles(edgesSym, numPartitions)
     val sup = Ckpt.materialize(scatterSupport(tri))
-    o.release()
+    o.unpersist()
     sup
   }
 

@@ -23,8 +23,10 @@ import graft.core.Ckpt
   * the t vector — the exact linear-algebra form of the paper.
   *
   * Spark-first shape: triangles are enumerated ONCE at their (deg,id)-min
-  * corner (KTruss.orientedTriangles — wedge fan-out bounded O(√E) per
-  * vertex), scattered to corners for t(v) and to their three edges for T̂;
+  * corner on the triangle kernel of the vertex loops
+  * (KTruss.orientedTriangles over `graft.core.Triangles` — sorted-merge
+  * intersections of rows bounded O(√E) per vertex, no wedge records),
+  * scattered to corners for t(v) and to their three edges for T̂;
   * both gathers are plain join + hash-agg over the (bounded) edge list, and
   * t(G) folds in as a 1×1 cross join — no driver collect, no all-pairs
   * join anywhere. A triangle-free graph yields TC ≡ 0 (t(G) = 0 guard).
@@ -36,14 +38,14 @@ object TriangleCentrality {
 
   def run(edgesSym: DataFrame, numPartitions: Int): DataFrame = {
     val e = edgesSym.select(col("src"), col("dst")).persist()
-    e.count()
     try {
+      // the kernel's vertex count materializes the cached input
       val (triPlan, o) = KTruss.orientedTriangles(e, numPartitions)
       // tri feeds three branches (corners, triangle edges, t(G)) — one scan;
-      // the oriented state is consumed by this materialization and released
+      // the kernel is consumed by this materialization and freed
       // immediately (the supportCanon discipline)
       val triS = Ckpt.materialize(triPlan)
-      o.release()
+      o.unpersist()
       val tri = triS.df
 
       // t(v): each triangle counts once at each of its three corners

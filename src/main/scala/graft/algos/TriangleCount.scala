@@ -1,8 +1,9 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{GrbMask, GrbMatrix, GrbShape, Ops}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import graft.core.{CsrGraph, Pairs, Triangles, VertexLayout, VertexLoop}
 
 /** Triangle count with the reference kernel chain (SURVEY.md §7.1 algos):
   * L = tril(A) (select `src > dst`,
@@ -10,45 +11,82 @@ import graft.core.{GrbMask, GrbMatrix, GrbShape, Ops}
   * masked `plus_pair` matrix square `C(L.S) = L · Lᵀ`, then
   * `reduce_scalar(plus)`.
   *
-  * The mask is applied BELOW the aggregation (mask-first join order): we
-  * start from the mask edge (i,j) and join both neighbor lists, so the
-  * intermediate is bounded by Σ_(i,j)∈L wedges(i,j) instead of the full
-  * unmasked square — the pushdown Catalyst cannot infer (SURVEY.md §4.2).
+  * Both run on the triangle kernel of the vertex loops
+  * (`graft.core.Triangles`): the edges are oriented once by (deg, id), each
+  * oriented row is shipped to the partitions that point to it, and the
+  * masked dot products are sorted-merge intersections in primitive loops.
+  * Nothing is joined: no wedge is ever a record.
   */
 object TriangleCount {
 
-  /** edgesSym: symmetric deduplicated (src, dst), no self-loops.
-    *
-    * Counts via the degree-ORIENTED enumeration (KTruss.orientedTriangles):
-    * each triangle exactly once at its (deg,id)-minimum corner. The id-tril
-    * masked form this replaces bounds the wedge intermediate by
-    * Σ wedges-over-L, which on power-law web graphs still lets a high-id
-    * hub fan out over its full lower neighborhood; orienting by DEGREE
-    * bounds every vertex's fan-out by O(√E) — the same count, an
-    * asymptotically smaller join (measured 143.9M → 21.9M wedge rows at
-    * the sf0.1 symmetric fixture in the KTruss work). */
+  private def partitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+
+  /** edgesSym: symmetric deduplicated (src, dst), no self-loops. The sum of
+    * the intersection sizes |N⁺(a) ∩ N⁺(b)|, which counts each triangle once
+    * at its (deg, id)-least corner. The input is persisted for its two
+    * reads (the vertex count's job and the build) and released with
+    * everything else before the count returns. */
   def count(edgesSym: DataFrame): Long = {
-    val parts = edgesSym.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    // the (possibly derived) symmetric input feeds three plan branches
-    // (degrees, orientation, close join) — scan and deduplicate it once
     val e = edgesSym.select(col("src"), col("dst")).persist()
-    e.count()
     try {
-      val (tri, o) = KTruss.orientedTriangles(e, parts)
-      try tri.count() finally o.release()
+      val tri = Triangles(e, partitions(e.sparkSession))
+      try tri.count() finally tri.unpersist()
     } finally e.unpersist(false)
   }
 
   /** Per-edge triangle support: the masked plus_pair square itself,
-    * C(L.S) = L·Lᵀ — (src, dst, v = #common neighbors), only for edges of L
-    * that close at least one wedge. Exercises GrbMatrix.mxm mask pushdown. */
+    * C(L.S) = L·Lᵀ — (src, dst, v = #common neighbors k < dst), only for
+    * edges of L that close at least one wedge. Each triangle k < j < i adds
+    * 1 to the mask entry (i, j): the kernel sends j to the owner of i, which
+    * sorts each vertex's entries and counts the runs. The rows are cached
+    * in one job, the kernel is freed, and the frame reads the cache alone. */
   def support(edgesSym: DataFrame, n: Long): DataFrame = {
-    // L feeds three plan branches (left, transpose, mask) — persist it
-    val l = GrbMatrix(
-      edgesSym.filter(col("src") > col("dst"))
-        .select(col("src"), col("dst"), lit(1.0).as("v")).persist(),
-      GrbShape(n, n))
-    l.mxm(l.transpose, Ops.plusPair, Some(l.structureMask())).df
+    val spark = edgesSym.sparkSession
+    val layout = VertexLayout(n, partitions(spark))
+    val tri = Triangles(edgesSym, layout)
+    try {
+      val entries = VertexLoop.exchange(tri.perPartition { _ =>
+        new Triangles.Sink[Array[AnyRef]] {
+          private[this] val out = new Pairs(layout.p, layout.intIds)
+          def apply(a: Long, b: Long, c: Long): Unit = {
+            val i = math.max(a, math.max(b, c))
+            val j = math.max(math.min(a, b), math.min(math.max(a, b), c))
+            out.put(layout.part(i), layout.slot(i), j)
+          }
+          def result(): Array[AnyRef] = out.result()
+        }
+      }, layout.p)
+      val rows = entries.mapPartitionsWithIndex { (k, it) =>
+        val blocks = CsrGraph.pack(it.next(), layout.slots(k), CsrGraph.BlockEdges, layout.intIds)
+        val out = Iterator.newBuilder[Row]
+        var js = new Array[Long](16) // one vertex's entries, which may span blocks
+        var len = 0
+        blocks.foreach(b => b.foreachEdge { (r, j) =>
+          if (len == js.length) js = java.util.Arrays.copyOf(js, 2 * len)
+          js(len) = j
+          len += 1
+          if (len == b.deg(r)) {
+            java.util.Arrays.sort(js, 0, len)
+            val i = layout.vertex(k, b.src(r))
+            var x = 0
+            while (x < len) {
+              var y = x + 1
+              while (y < len && js(y) == js(x)) y += 1
+              out += Row(i, js(x), (y - x).toDouble)
+              x = y
+            }
+            len = 0
+          }
+        })
+        out.result()
+      }
+      val df = spark.createDataFrame(rows, StructType(Seq(
+        StructField("src", LongType, nullable = false),
+        StructField("dst", LongType, nullable = false),
+        StructField("v", DoubleType, nullable = false)))).persist()
+      df.queryExecution.toRdd.foreachPartition((_: Iterator[_]) => ())
+      df
+    } finally tri.unpersist()
   }
 }

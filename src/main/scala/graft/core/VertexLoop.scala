@@ -4,6 +4,7 @@ import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 import org.apache.spark.{Partitioner, SparkContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -104,30 +105,20 @@ object CsrGraph {
 
   /** The graph whose out-edges are the rows (`from`, `to`) of `edges`. Each
     * input partition sends every owner one array of interleaved (slot,
-    * target) pairs for the sources it holds (`VertexLoop.exchange`), and
-    * each owner counting-sorts what it received by slot into blocks of
-    * `blockEdges` edges. Nothing spills. A sender holds its input
-    * partition's edges in `p` growing primitive arrays: 16 B per edge, up to
-    * 32 B right after their capacities double, plus one target's share
+    * target) pairs for the sources it holds (`messages`), and each owner
+    * counting-sorts what it received by slot into blocks of `blockEdges`
+    * edges. Nothing spills. The pairs are `Int`s when `layout.intIds` and
+    * `Long`s otherwise: 8 or 16 B per edge. A sender holds its input
+    * partition's edges in `p` growing primitive arrays: one pair per edge,
+    * up to two right after their capacities double, plus one target's share
     * again while that array is copied to its exact size to be sent. An
-    * owner holds the arrays it received (16 B per edge) and its blocks and
-    * two longs per slot, and drops each received array once its edges are
-    * in the blocks. A block takes 4 B per edge when `layout.intIds` and 8 B
-    * otherwise, and 16 B per row. */
+    * owner holds the arrays it received (one pair per edge) and its blocks
+    * and two longs per slot, and drops each received array once its edges
+    * are in the blocks. A block takes 4 B per edge when `layout.intIds` and
+    * 8 B otherwise, and 16 B per row. */
   def build(edges: DataFrame, from: String, to: String, layout: VertexLayout,
             blockEdges: Int = BlockEdges): CsrGraph = {
-    val p = layout.p
-    val sent = edges.select(col(from).cast("long"), col(to).cast("long"))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val out = Array.fill(p)(new ArrayBuilder.ofLong)
-        rows.foreach { r =>
-          val s = r.getLong(0)
-          out(layout.part(s)).addOne(layout.slot(s)).addOne(r.getLong(1))
-        }
-        // each builder is dropped once its array is taken
-        Iterator(Array.tabulate(p) { t => val a = out(t).result(); out(t) = null; a })
-      }
-    val blocks = VertexLoop.exchange(sent, p)
+    val blocks = VertexLoop.exchange(messages(edges, from, to, layout), layout.p)
       .mapPartitionsWithIndex { (k, it) =>
         pack(it.next(), layout.slots(k), blockEdges, layout.intIds)
       }
@@ -135,17 +126,28 @@ object CsrGraph {
     new CsrGraph(layout, blocks)
   }
 
-  /** Counting-sorts the (slot, target) pairs of `msgs` by slot, in message
-    * order within a slot, and cuts the sorted edges into blocks of `cap`: a
-    * row cut at a block's end goes on in the next block with its full
-    * degree. The blocks hold `Int` targets when `narrow`. */
-  private[graft] def pack(msgs: Array[Array[Long]], slots: Int, cap: Int,
+  /** Per input partition of `edges`, the `Pairs` message to each owner: the
+    * (slot(from), to) pair of every row whose `from` it owns. */
+  private[graft] def messages(edges: DataFrame, from: String, to: String,
+                              layout: VertexLayout): RDD[Array[AnyRef]] =
+    edges.select(col(from).cast("long"), col(to).cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val out = new Pairs(layout.p, layout.intIds)
+        rows.foreach { r =>
+          val s = r.getLong(0)
+          out.put(layout.part(s), layout.slot(s), r.getLong(1))
+        }
+        Iterator(out.result())
+      }
+
+  /** Counting-sorts the (slot, target) pairs of `msgs` (`Pairs` messages)
+    * by slot, in message order within a slot, and cuts the sorted edges into
+    * blocks of `cap`: a row cut at a block's end goes on in the next block
+    * with its full degree. The blocks hold `Int` targets when `narrow`. */
+  private[graft] def pack(msgs: Array[_ <: AnyRef], slots: Int, cap: Int,
                           narrow: Boolean): Iterator[CsrBlock] = {
     val deg = new Array[Long](slots)
-    msgs.foreach { m =>
-      var i = 0
-      while (i < m.length) { deg(m(i).toInt) += 1; i += 2 }
-    }
+    msgs.foreach(Pairs.foreach(_)((s, _) => deg(s) += 1))
     val next = new Array[Long](slots) // where a slot's next edge goes
     var total = 0L
     var j = 0
@@ -154,18 +156,15 @@ object CsrGraph {
     def size(b: Int) = math.min(cap, total - b.toLong * cap).toInt
     val ints = Array.tabulate(nBlocks)(b => if (narrow) new Array[Int](size(b)) else null)
     val longs = Array.tabulate(nBlocks)(b => if (narrow) null else new Array[Long](size(b)))
-    msgs.indices.foreach { s =>
-      val m = msgs(s)
-      var i = 0
-      while (i < m.length) {
-        val at = next(m(i).toInt)
-        next(m(i).toInt) = at + 1
+    msgs.indices.foreach { m =>
+      Pairs.foreach(msgs(m)) { (s, t) =>
+        val at = next(s)
+        next(s) = at + 1
         val b = (at / cap).toInt
         val e = (at % cap).toInt
-        if (narrow) ints(b)(e) = m(i + 1).toInt else longs(b)(e) = m(i + 1)
-        i += 2
+        if (narrow) ints(b)(e) = t.toInt else longs(b)(e) = t
       }
-      msgs(s) = null // its edges are in the blocks now
+      msgs.asInstanceOf[Array[AnyRef]](m) = null // its edges are in the blocks now
     }
     // now next(j) is the end of slot j's edges
     val blocks = new Array[CsrBlock](nBlocks)
@@ -198,6 +197,36 @@ object CsrGraph {
   }
 }
 
+/** Per target partition, a growing message of interleaved (slot, target)
+  * pairs: an `Array[Int]` when `narrow` (every vertex id fits an `Int`) and
+  * an `Array[Long]` otherwise, so a narrow pair takes 8 B, not 16. */
+private[graft] final class Pairs(p: Int, narrow: Boolean) {
+  private[this] val ints = if (narrow) Array.fill(p)(new ArrayBuilder.ofInt) else null
+  private[this] val longs = if (narrow) null else Array.fill(p)(new ArrayBuilder.ofLong)
+
+  def put(part: Int, slot: Int, target: Long): Unit =
+    if (narrow) ints(part).addOne(slot).addOne(target.toInt)
+    else longs(part).addOne(slot).addOne(target)
+
+  /** The `p` messages; each builder is dropped once its array is taken. */
+  def result(): Array[AnyRef] = Array.tabulate[AnyRef](p) { t =>
+    if (narrow) { val a = ints(t).result(); ints(t) = null; a }
+    else { val a = longs(t).result(); longs(t) = null; a }
+  }
+}
+
+private[graft] object Pairs {
+  /** `f(slot, target)` for each pair of one message, in order. */
+  def foreach(msg: AnyRef)(f: (Int, Long) => Unit): Unit = msg match {
+    case m: Array[Int] =>
+      var i = 0
+      while (i < m.length) { f(m(i), m(i + 1)); i += 2 }
+    case m: Array[Long] =>
+      var i = 0
+      while (i < m.length) { f(m(i).toInt, m(i + 1)); i += 2 }
+  }
+}
+
 /** The driver of dense-vector loops over a `VertexLayout`. A state holds
   * one element per partition: its share of the vectors and a metric. A
   * round sends along out-edges to the targets' owners, either as
@@ -213,9 +242,9 @@ object VertexLoop {
   /** Ships one message per partition pair. Each partition of `out` holds
     * one array of `p` messages, the t-th for partition t; partition t of the
     * result holds one array of the messages sent to it, the s-th from
-    * partition s of `out`. Messages are primitive arrays, which Spark
-    * serializes with Kryo, and the receivers see them in sender order
-    * whatever order the shuffle fetches them in. */
+    * partition s of `out`. Messages are primitive arrays (or `Pairs`
+    * messages, typed `AnyRef`), serialized with Kryo, and the receivers see
+    * them in sender order whatever order the shuffle fetches them in. */
   def exchange[M: ClassTag](out: RDD[Array[M]], p: Int): RDD[Array[M]] = {
     val senders = out.getNumPartitions
     val keyed = out.mapPartitionsWithIndex { (s, it) =>
@@ -223,11 +252,13 @@ object VertexLoop {
       require(msgs.length == p, s"partition $s sent ${msgs.length} messages to $p partitions")
       Iterator.tabulate(p)(t => (s.toLong * p + t, msgs(t)))
     }
-    new ShuffledRDD[Long, M, M](keyed, VertexPartitioner(p)).mapPartitions { it =>
-      val in = new Array[M](senders)
-      it.foreach { case (key, m) => in((key / p).toInt) = m }
-      Iterator(in)
-    }
+    new ShuffledRDD[Long, M, M](keyed, VertexPartitioner(p))
+      .setSerializer(new KryoSerializer(out.sparkContext.getConf))
+      .mapPartitions { it =>
+        val in = new Array[M](senders)
+        it.foreach { case (key, m) => in((key / p).toInt) = m }
+        Iterator(in)
+      }
   }
 
   /** The state whose partition `part` holds `f(part, slots)`. */

@@ -13,7 +13,8 @@ import java.util.concurrent.atomic.AtomicLong
   * (Bench.scala is frozen); its numbers are cited in BENCH/BASELINE.md.
   *
   * The input is synthesized DETERMINISTICALLY from the sf0.1 fixtures: ten
-  * copies, copy i with its join keys shifted by i·10⁷ (lineitem) / doc_id
+  * copies of every column, so any query over lineitem or documents can read
+  * them, copy i with its join keys shifted by i·10⁷ (lineitem) / doc_id
   * shifted by i·10⁶ and text prefixed "c<i>|" (documents) — so the derived
   * graph keeps the fixture's degree shape at 10× the rows and the dedup
   * corpus keeps the intra-copy duplicate structure. The dir is named
@@ -64,17 +65,18 @@ object StressLeg {
       val li = spark.read.parquet(s"$base/lineitem.parquet")
       val docs = spark.read.parquet(s"$base/documents.parquet")
       val li10 = (0 until 10).map { i =>
-        li.select((col("l_orderkey") + lit(i * 10000000L)).as("l_orderkey"),
-          (col("l_partkey") + lit(i * 10000000L)).as("l_partkey"),
-          col("l_suppkey"), col("l_linenumber"), col("l_quantity"),
-          col("l_extendedprice"), col("l_discount"), col("l_tax"),
-          col("l_returnflag"), col("l_linestatus"), col("l_shipdate"))
+        li.select(li.columns.map {
+          case c @ ("l_orderkey" | "l_partkey") => (col(c) + lit(i * 10000000L)).as(c)
+          case c => col(c)
+        }.toSeq: _*)
       }.reduce(_ union _)
       li10.repartition(32).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
       val docs10 = (0 until 10).map { i =>
-        docs.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          concat(lit(s"c$i|"), col("text")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
+        docs.select(docs.columns.map {
+          case "doc_id" => (col("doc_id") + lit(i * 1000000L)).as("doc_id")
+          case "text" => concat(lit(s"c$i|"), col("text")).as("text")
+          case c => col(c)
+        }.toSeq: _*)
       }.reduce(_ union _)
       docs10.repartition(8).write.mode("overwrite").parquet(s"$out/documents.parquet")
       new java.io.File(out + "/_DONE").createNewFile()

@@ -19,7 +19,10 @@ class PlanSpec extends AnyFunSuite with SparkTest {
     // scale the L mask IS the edge set and a forced broadcast OOMs. The
     // analyzed plan must carry no broadcast hint; AQE may still choose one
     // from runtime stats, which is the correct, size-aware behavior.
-    val df = graft.algos.TriangleCount.support(edges(50), 50)
+    val sym = edges(50)
+    val l = GrbMatrix(sym.filter(col("src") > col("dst"))
+      .select(col("src"), col("dst"), lit(1.0).as("v")), GrbShape(50, 50))
+    val df = l.mxm(l.transpose, Ops.plusPair, Some(l.structureMask())).df
     val analyzed = df.queryExecution.analyzed.toString
     assert(!analyzed.contains("broadcast"), analyzed)
   }

@@ -87,4 +87,26 @@ class VertexLoopSpec extends AnyFunSuite with SparkTest {
       } finally g.unpersist()
     }
   }
+
+  test("the build sends Int pairs when ids fit an Int and cuts the same blocks as with Long pairs") {
+    val edges = ((0L until 10L).map(d => (4L, d + 10)) ++
+      Seq((4L, 10L), (7L, 1L), (7L, 2L), (19L, 0L))).toDF("src", "dst").repartition(2)
+    val p = 3
+    // the same owners and slots; only the id width differs
+    val narrow = VertexLayout(20, p)
+    val wide = VertexLayout(Int.MaxValue.toLong + 10, p)
+    assert(narrow.intIds && !wide.intIds)
+    def sent(l: VertexLayout) = CsrGraph.messages(edges, "src", "dst", l).collect()
+    val (ints, longs) = (sent(narrow), sent(wide))
+    assert(ints.length == 2 && ints.forall(_.forall(_.isInstanceOf[Array[Int]])))
+    assert(longs.forall(_.forall(_.isInstanceOf[Array[Long]])))
+    // owner t receives the t-th message of each sender
+    def cut(msgs: Array[Array[AnyRef]], t: Int, narrowBlocks: Boolean) =
+      CsrGraph.pack(msgs.map(_(t)), narrow.slots(t), 4, narrowBlocks).map { b =>
+        (b.src.toSeq, b.deg.toSeq, b.off.toSeq, (0 until b.edges).map(b.dst))
+      }.toSeq
+    val blocks = (0 until p).map(t => cut(ints, t, narrowBlocks = true))
+    (0 until p).foreach(t => assert(blocks(t) == cut(longs, t, narrowBlocks = false), s"owner $t"))
+    assert(blocks.flatten.map(_._4.size).sum == 14)
+  }
 }

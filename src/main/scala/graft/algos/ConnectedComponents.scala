@@ -35,8 +35,9 @@ final case class CCResult(components: DataFrame, iterations: Int, converged: Boo
   * and the answers in the order asked. A sender's messages hold at most its
   * edges (pushes) or its slots (hooks, asks), never a target's whole slot
   * range, so a round ships O(n + E) values besides its 4p^2 messages. The
-  * change count rides the job that materializes the new (f, gp). Converges
-  * in O(log n) rounds.
+  * change count rides the job that materializes the new (f, gp), and so
+  * does a `checkpointer`'s save of f as (id, v) rows: each task writes its
+  * partition. Converges in O(log n) rounds.
   */
 object ConnectedComponents {
 
@@ -51,15 +52,12 @@ object ConnectedComponents {
       val f = Array.tabulate(m)(j => layout.vertex(k, j))
       (f, f) // f is the identity map, so gp = f(f) = f
     }
-    def parents(state: State, name: String) =
-      VertexLoop.frame(spark, layout, state, name, LongType)(_._1(_))
-    val run = VertexLoop.iterate(start, 0, maxIter, _ == 0)(round(graph, _)) {
-      (state, iter, changed) =>
-        checkpointer.foreach(_.save(parents(state, "v"), iter,
-          Map("changed" -> changed.toLong.toString)))
-    }
+    val snapshot = checkpointer.map(new VertexLoop.Snapshot[(Array[Long], Array[Long])](_,
+      layout, "v", LongType, changed => Map("changed" -> changed.toLong.toString))(_._1(_)))
+    val run = VertexLoop.iterate(start, 0, maxIter, _ == 0, snapshot)(round(graph, _))()
     graph.unpersist()
-    CCResult(parents(run.state, "component"), run.rounds, run.converged)
+    CCResult(VertexLoop.frame(spark, layout, run.state, "component", LongType)(_._1(_)),
+      run.rounds, run.converged)
   }
 
   private def round(graph: CsrGraph, state: State): (State, Seq[RDD[_]]) = {

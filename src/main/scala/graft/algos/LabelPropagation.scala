@@ -26,7 +26,10 @@ final case class LPResult(labels: DataFrame, iterations: Int, converged: Boolean
   * per partition pair in the round's only exchange. The owner sorts the
   * keys it received, so each run of equal keys is one vote count, and
   * keeps the best (count, label) per slot in two arrays of its own size.
-  * Packing the label needs n <= 2^32; a larger `n` fails before any job.
+  * The job that materializes the new labels counts the changed ones and,
+  * with a `checkpointer`, writes them as (id, lbl) rows, each task its own
+  * partition, so a round is one job. Packing the label needs n <= 2^32; a
+  * larger `n` fails before any job.
   *
   * Unlike min-label propagation (which re-derives connected components —
   * round-1 VERDICT flagged that redundancy), mode-LPA is the community-
@@ -50,16 +53,14 @@ object LabelPropagation {
     val start = VertexLoop.init(spark.sparkContext, layout) { (k, m) =>
       Array.tabulate(m)(j => layout.vertex(k, j))
     }
-    def labels(state: State, name: String) =
-      VertexLoop.frame(spark, layout, state, name, LongType)(_(_))
-    val run = VertexLoop.iterate(start, 0, maxIter, _ == 0) { state =>
+    val snapshot = checkpointer.map(new VertexLoop.Snapshot[Array[Long]](_, layout, "lbl",
+      LongType, changed => Map("changed" -> changed.toLong.toString))(_(_)))
+    val run = VertexLoop.iterate(start, 0, maxIter, _ == 0, snapshot) { state =>
       (round(graph, state), Nil)
-    } { (state, iter, changed) =>
-      checkpointer.foreach(_.save(labels(state, "lbl"), iter,
-        Map("changed" -> changed.toLong.toString)))
-    }
+    }()
     graph.unpersist()
-    LPResult(labels(run.state, "label"), run.rounds, run.converged)
+    LPResult(VertexLoop.frame(spark, layout, run.state, "label", LongType)(_(_)),
+      run.rounds, run.converged)
   }
 
   private def round(graph: CsrGraph, state: State): State = {

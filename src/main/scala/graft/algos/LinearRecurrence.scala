@@ -2,10 +2,10 @@ package graft.algos
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DoubleType
-import graft.core.{CsrGraph, VertexLayout, VertexLoop}
+import graft.core.{CsrGraph, VertexLoop}
 import graft.graph.Adjacency
 import graft.runtime.IterationCheckpointer
 
@@ -63,8 +63,11 @@ final case class LinearRecurrence(base: Double, scale: Double, perDegree: Boolea
     * Σ|r - t| <= tol or `maxIter` rounds have run; tol = 0 runs exactly
     * `maxIter` rounds (the oracle-unroll discipline). The rounds read the
     * adjacency's persisted CSR blocks, which were cut at its build and
-    * outlive the run. The result is dense: (id, v) for every vertex of
-    * 0..n-1; `finalRdiff` is NaN when no round ran. */
+    * outlive the run. A `checkpointer` saves each round it strides to as
+    * (id, v) rows, written by the tasks of the job that computes the round
+    * (`VertexLoop.Snapshot`), so a checkpointed round is still one job. The
+    * result is dense: (id, v) for every vertex of 0..n-1; `finalRdiff` is
+    * NaN when no round ran. */
   def run(spark: SparkSession, adj: Adjacency, tol: Double, maxIter: Int,
           checkpointer: Option[IterationCheckpointer] = None)(
       init: Long => Double): PageRankResult = {
@@ -79,17 +82,12 @@ final case class LinearRecurrence(base: Double, scale: Double, perDegree: Boolea
           Array.tabulate(m)(j => init(layout.vertex(k, j)))
         })
     }
-    val run = VertexLoop.iterate(start, startIter, maxIter, tol > 0 && _ <= tol) { state =>
-      (round(graph, state), Nil)
-    } { (state, iter, rdiff) =>
-      checkpointer.foreach(_.save(scores(spark, layout, state), iter,
-        Map("rdiff" -> rdiff.toString)))
-    }
-    PageRankResult(scores(spark, layout, run.state), run.rounds,
+    val snapshot = checkpointer.map(new VertexLoop.Snapshot[Array[Double]](_, layout, "v",
+      DoubleType, rdiff => Map("rdiff" -> rdiff.toString))(_(_)))
+    val run = VertexLoop.iterate(start, startIter, maxIter, tol > 0 && _ <= tol, snapshot) {
+      state => (round(graph, state), Nil)
+    }()
+    PageRankResult(VertexLoop.frame(spark, layout, run.state, "v", DoubleType)(_(_)), run.rounds,
       adj.numEdges * run.rounds.toLong, run.metric)
   }
-
-  private def scores(spark: SparkSession, layout: VertexLayout,
-                     state: RDD[(Array[Double], Double)]): DataFrame =
-    VertexLoop.frame(spark, layout, state, "v", DoubleType)(_(_))
 }

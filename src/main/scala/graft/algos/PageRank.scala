@@ -27,7 +27,8 @@ final case class PageRankResult(scores: DataFrame, iterations: Int,
   * round's only shuffle, and fills the new array with `teleport + sum`; the
   * job that materializes it also sums |t - r|. So a round is one job.
   * With tol = 0 the loop runs exactly `maxIter` rounds. A `checkpointer`
-  * saves every round and resumes from its latest snapshot.
+  * saves every round it strides to in that same job, each task writing its
+  * partition's scores, and a run resumes from its latest snapshot.
   *
   * We compute in FP64 rather than the notebook's FP32 (documented
   * divergence: FP64 is strictly closer to the true recurrence, and the

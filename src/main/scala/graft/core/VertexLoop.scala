@@ -2,13 +2,14 @@ package graft.core
 
 import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
-import org.apache.spark.{Partitioner, SparkContext}
+import org.apache.spark.{Partitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import graft.runtime.IterationCheckpointer
 
 /** Block-cyclic placement of the vertex universe 0..n-1 over `p`
   * partitions: vertex i lives in partition i mod p at slot i / p, so each
@@ -276,27 +277,58 @@ object VertexLoop {
       Iterator((a, 0.0))
     }
 
+  /** How a loop saves its state: each round that `checkpointer.saves` is
+    * written by the tasks of the job that computes it, each partition as one
+    * parquet file of (id, `name`) rows, `value(s, slot)` one entry of a
+    * partition's share `s` (as `frame` reads it); `metrics` names the round's
+    * metric in the manifest. */
+  final class Snapshot[S](val checkpointer: IterationCheckpointer, layout: VertexLayout,
+                          name: String, dataType: DataType,
+                          val metrics: Double => Map[String, String])(value: (S, Int) => Any) {
+
+    /** Clears the snapshot of round `iteration` and returns the task-side
+      * write of a partition's share, which returns its row count. */
+    private[VertexLoop] def writer(iteration: Int): (Int, S) => Long = {
+      val path = checkpointer.begin(iteration)
+      // copies, so the task captures them and not `this`, which holds the checkpointer
+      val (at, column, kind, entry) = (layout, name, dataType, value)
+      (k, s) => IterationCheckpointer.writePart(path, k, column, kind)(
+        Iterator.tabulate(at.slots(k))(j => (at.vertex(k, j), entry(s, j))))
+    }
+  }
+
   /** Runs `round` from `start` (after `startRound` rounds) until
     * `done(metric)` holds or `maxIter` rounds have run. `round` returns the
     * next state and the RDDs it persisted for that round alone. Each new
-    * state is persisted, cut from its lineage and computed in one job; then
-    * the previous state and the round's RDDs are freed and `after(state,
-    * rounds, metric)` runs. The metric is NaN when no round ran. */
+    * state is persisted, cut from its lineage and computed in one job, whose
+    * tasks also write the round's `snapshot` when it saves that round; the
+    * driver then writes the manifest from the row counts the tasks return.
+    * Then the previous state and the round's RDDs are freed and
+    * `after(state, rounds, metric)` runs. The metric is NaN when no round
+    * ran. */
   def iterate[S](start: RDD[(S, Double)], startRound: Int, maxIter: Int,
-                 done: Double => Boolean)(
+                 done: Double => Boolean, snapshot: Option[Snapshot[S]] = None)(
       round: RDD[(S, Double)] => (RDD[(S, Double)], Seq[RDD[_]]))(
-      after: (RDD[(S, Double)], Int, Double) => Unit): Run[S] = {
+      after: (RDD[(S, Double)], Int, Double) => Unit = (_: Any, _: Any, _: Any) => ()
+  ): Run[S] = {
     var state = start
     var rounds = startRound
     var metric = Double.NaN
     while (rounds < maxIter && !done(metric)) {
       val (next, scratch) = round(state)
       next.localCheckpoint()
-      metric = next.sparkContext
-        .runJob(next, (it: Iterator[(S, Double)]) => it.map(_._2).sum).sum
+      rounds += 1
+      val save = snapshot.filter(_.checkpointer.saves(rounds))
+      val write = save.map(_.writer(rounds))
+      val parts = next.sparkContext.runJob(next, (ctx: TaskContext, it: Iterator[(S, Double)]) => {
+        val (s, m) = it.next()
+        (m, write.fold(0L)(_(ctx.partitionId(), s)))
+      })
+      metric = parts.map(_._1).sum
+      save.foreach(s => s.checkpointer.commit(rounds, s.metrics(metric),
+        parts.indices.map(k => k -> parts(k)._2)))
       (state +: scratch).foreach(_.unpersist(blocking = false))
       state = next
-      rounds += 1
       after(state, rounds, metric)
     }
     Run(state, rounds, metric, done(metric))

@@ -63,11 +63,13 @@ object SparkEntry {
     math.max(4, math.min(bySize, conf * 4))
   }
 
-  /** Deterministic per-(sfDir, tag) fixture dir for the IcebergLite queries,
-    * WIPED and rebuilt each call — createTempDirectory would leak a full
-    * table copy per bench/verify invocation (ADVICE-class temp-dir leak). */
-  private def icebergFixtureDir(s: SparkSession, sfDir: String, tag: String): String = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft-iceberg-$tag-" +
+  /** Deterministic per-(sfDir, tag) directory for a query that writes files
+    * of its own (IcebergLite tables, checkpoints, a saved model), WIPED at
+    * the start of each call: createTempDirectory would leak one directory
+    * per Bench or Verify pass, and a stale checkpoint would let a resumed
+    * run start from a previous call's manifest. */
+  private def scratchDir(s: SparkSession, sfDir: String, tag: String): String = {
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft-$tag-" +
       java.lang.Integer.toHexString(sfDir.hashCode)
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -443,7 +445,7 @@ object SparkEntry {
       // hash-match the straight-through 5-iteration unrolled oracle, proving
       // the parquet+manifest snapshot loses nothing (state round-trips FP64
       // bit-exact) and the resumed loop is the same recurrence.
-      val ck = java.nio.file.Files.createTempDirectory("graft-resume").toString
+      val ck = scratchDir(s, d, "resume")
       val adj = Adjacency.build(edgesG(s, d), gmod(d), gparts(s, d))
       val c = new IterationCheckpointer(ck)
       PageRank.run(s, adj, damping = 0.85, tol = 0.0, maxIter = 3,
@@ -1349,8 +1351,7 @@ object SparkEntry {
       // the round trip must be semantically invisible (the 100-TB contract:
       // train the model once, score later batches across sessions)
       val docs = t(s, d, "documents")
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-lm-reload").toString
+      val dir = scratchDir(s, d, "lm-reload")
       Selection.saveLm(Selection.trainLm(docs), dir)
       Selection.scoreLm(docs, Selection.loadLm(s, dir))
     }),
@@ -1370,7 +1371,7 @@ object SparkEntry {
       // CURRENT snapshot read walks version-hint → metadata.json →
       // manifest-list Avro → manifest Avro → parquet and must hash-match
       // the raw table via the oracle
-      val dir = icebergFixtureDir(s, d, "roundtrip")
+      val dir = scratchDir(s, d, "iceberg-roundtrip")
       val docs = t(s, d, "documents")
       graft.ingest.IcebergLite.append(docs.filter(col("doc_id") % 2 === 0),
         dir, partitionCols = Seq("lang"), nowMs = 1000L)
@@ -1388,7 +1389,7 @@ object SparkEntry {
       // applied, equality deletes applied STRICTLY to older sequence
       // numbers, and the re-appended sub-slice alive again — the three v2
       // row-level mechanisms in one read.
-      val dir = icebergFixtureDir(s, d, "mor")
+      val dir = scratchDir(s, d, "iceberg-mor")
       val docs = t(s, d, "documents")
       graft.ingest.IcebergLite.append(docs, dir, nowMs = 1000L)
       graft.ingest.IcebergLite.deleteWhere(s, dir,
@@ -1405,7 +1406,7 @@ object SparkEntry {
       // partition-pruned snapshot read: only lang=en files are planned
       // (manifest bounds + file tuples); correctness of the pruning is the
       // oracle's WHERE clause
-      val dir = icebergFixtureDir(s, d, "prune")
+      val dir = scratchDir(s, d, "iceberg-prune")
       graft.ingest.IcebergLite.append(t(s, d, "documents"), dir,
         partitionCols = Seq("lang"), nowMs = 1000L)
       graft.ingest.IcebergLite.readTable(s, dir,
@@ -1422,7 +1423,7 @@ object SparkEntry {
       // partition's plan keeps); re-append doc_id%26==5 (seq 4 — strictly
       // newer than both deletes, so it survives them). The filtered read
       // exercises tuple pruning AND both delete scopes in one plan.
-      val dir = icebergFixtureDir(s, d, "morpart")
+      val dir = scratchDir(s, d, "iceberg-morpart")
       val docs = t(s, d, "documents")
       graft.ingest.IcebergLite.append(docs, dir,
         partitionCols = Seq("lang"), nowMs = 1000L)

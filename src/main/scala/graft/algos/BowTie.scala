@@ -2,7 +2,7 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Ckpt, CkptState}
+import graft.core.Ckpt
 
 final case class BowTieResult(classes: DataFrame, coreId: Long, rounds: Int)
 
@@ -43,54 +43,33 @@ object BowTie {
     val seed = comp.select(col("id"),
       when(col("scc") === coreId, lit(-1L)).otherwise(col("id")).as("c"))
 
-    // The IN and OUT reachability passes are INDEPENDENT — overlap them
-    // from two driver threads (guide §2.6: actions are only sequential
-    // because the driver calls them sequentially). Each pass's tiny
-    // per-iteration stages leave most executors idle, so the other pass's
-    // tasks back-fill them; results are unchanged (no shared state beyond
-    // the immutable seed/edge plans).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      // IN: v reaches the core — propagate the sentinel AGAINST edge
-      // direction, i.e. along the reversed edge set
-      val fIn = pool.submit(new java.util.concurrent.Callable[(CkptState, CkptState)] {
-        def call() = {
-          val revState = Ckpt.materialize(edges
-            .select(col("dst").as("src"), col("src").as("dst"))
-            .repartition(numPartitions, col("src")).sortWithinPartitions("src"))
-          val (inState, _) = MinReach.minReachColor(seed, revState.df,
-            numPartitions, debugTag = "bowtie-in")
-          (revState, inState)
-        }
-      })
-      // OUT: the core reaches v — propagate along the forward edges
-      val fOut = pool.submit(new java.util.concurrent.Callable[(CkptState, CkptState)] {
-        def call() = {
-          val fwdState = Ckpt.materialize(edges.select(col("src"), col("dst"))
-            .repartition(numPartitions, col("src")).sortWithinPartitions("src"))
-          val (outState, _) = MinReach.minReachColor(seed, fwdState.df,
-            numPartitions, debugTag = "bowtie-out")
-          (fwdState, outState)
-        }
-      })
-      val (revState, inState) = fIn.get()
-      val (fwdState, outState) = fOut.get()
+    // IN: v reaches the core — propagate the sentinel AGAINST edge
+    // direction, i.e. along the reversed edge set
+    val revState = Ckpt.materialize(edges
+      .select(col("dst").as("src"), col("src").as("dst"))
+      .repartition(numPartitions, col("src")).sortWithinPartitions("src"))
+    val (inState, _) = MinReach.minReachColor(seed, revState.df,
+      numPartitions, debugTag = "bowtie-in")
+    // OUT: the core reaches v — propagate along the forward edges
+    val fwdState = Ckpt.materialize(edges.select(col("src"), col("dst"))
+      .repartition(numPartitions, col("src")).sortWithinPartitions("src"))
+    val (outState, _) = MinReach.minReachColor(seed, fwdState.df,
+      numPartitions, debugTag = "bowtie-out")
 
-      val inSet = inState.df.filter(col("c") === -1L)
-        .select(col("id"), lit(true).as("_in"))
-      val outSet = outState.df.filter(col("c") === -1L)
-        .select(col("id"), lit(true).as("_out"))
-      val classes = comp
-        .join(inSet, Seq("id"), "left")
-        .join(outSet, Seq("id"), "left")
-        .select(col("id"),
-          when(col("scc") === coreId, "core")
-            .when(col("_in").isNotNull, "in")
-            .when(col("_out").isNotNull, "out")
-            .otherwise("other").as("cls"))
-      val out = Ckpt.materialize(classes).df
-      Seq(fwdState, revState, inState, outState).foreach(_.release())
-      BowTieResult(out, coreId, sccRes.rounds)
-    } finally pool.shutdown()
+    val inSet = inState.df.filter(col("c") === -1L)
+      .select(col("id"), lit(true).as("_in"))
+    val outSet = outState.df.filter(col("c") === -1L)
+      .select(col("id"), lit(true).as("_out"))
+    val classes = comp
+      .join(inSet, Seq("id"), "left")
+      .join(outSet, Seq("id"), "left")
+      .select(col("id"),
+        when(col("scc") === coreId, "core")
+          .when(col("_in").isNotNull, "in")
+          .when(col("_out").isNotNull, "out")
+          .otherwise("other").as("cls"))
+    val out = Ckpt.materialize(classes).df
+    Seq(fwdState, revState, inState, outState).foreach(_.release())
+    BowTieResult(out, coreId, sccRes.rounds)
   }
 }

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.JobCounts
 import org.apache.spark.sql.functions._
-import java.util.concurrent.atomic.AtomicLong
+import graft.GraftSession
 
 /** Memory-headroom stress leg (VERDICT r5 item 4): run the three
   * representative heavy operators — pagerank, connected_components,
@@ -27,38 +26,10 @@ import java.util.concurrent.atomic.AtomicLong
   */
 object StressLeg {
 
-  final class MemSpillProbe extends SparkListener {
-    val peakExecMem = new AtomicLong
-    val memSpill = new AtomicLong
-    val diskSpill = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        peakExecMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def reset(): Unit = { peakExecMem.set(0); memSpill.set(0)
-      diskSpill.set(0); shuffleWrite.set(0) }
-  }
-
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/root/repo/target/stress/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    new java.io.File("/dev/shm/graft-spark").mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.driver.maxResultSize", "4g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     if (!new java.io.File(out + "/_DONE").exists()) {
       spark.sparkContext.setJobDescription("stress: synthesize sf1 input")
@@ -82,25 +53,22 @@ object StressLeg {
       new java.io.File(out + "/_DONE").createNewFile()
     }
 
-    val probe = new MemSpillProbe
-    spark.sparkContext.addSparkListener(probe)
     val heapMax = Runtime.getRuntime.maxMemory() / 1e9
-    println(f"[stress] input=$out cpus=$cpus heapMax=$heapMax%.1fGB")
+    println(f"[stress] input=$out cpus=${GraftSession.cpus} heapMax=$heapMax%.1fGB")
     Seq("pagerank", "connected_components", "dedup_exact").foreach { q =>
-      Thread.sleep(300)
-      probe.reset()
       spark.sparkContext.setJobDescription(s"stress: $q @ sf1")
-      val t0 = System.nanoTime()
-      val rows = graft.SparkEntry.queries(q)(spark, out).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // drain listener queue
+      val ((rows, sec), c) = JobCounts(spark) {
+        val t0 = System.nanoTime()
+        val rows = graft.SparkEntry.queries(q)(spark, out).count()
+        (rows, (System.nanoTime() - t0) / 1e9)
+      }
       val usedHeap = (Runtime.getRuntime.totalMemory() -
         Runtime.getRuntime.freeMemory()) / 1e9
       println(f"[stress] $q%-22s sec=$sec%7.2f rows=$rows%8d " +
-        f"peakTaskExecMem=${probe.peakExecMem.get / 1e6}%8.1fMB " +
-        f"memSpill=${probe.memSpill.get / 1e6}%8.1fMB " +
-        f"diskSpill=${probe.diskSpill.get / 1e6}%8.1fMB " +
-        f"shufWrite=${probe.shuffleWrite.get / 1e6}%8.1fMB " +
+        f"peakTaskExecMem=${c.peakExecMemory.get / 1e6}%8.1fMB " +
+        f"memSpill=${c.memorySpillBytes.get / 1e6}%8.1fMB " +
+        f"diskSpill=${c.diskSpillBytes.get / 1e6}%8.1fMB " +
+        f"shufWrite=${c.shuffleWriteBytes.get / 1e6}%8.1fMB " +
         f"heapUsed=$usedHeap%5.1fGB")
     }
     spark.stop()
